@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ai_fabric_etl_spark.schemas import PARSED_SCHEMA, SILVER_SCHEMA
-from ai_fabric_etl_spark.x12.parsers import parse_x12_file
+from ai_fabric_etl_spark.x12.parsers import dead_letter_row, parse_x12_file
 
 _SILVER_COLS = [f.name for f in SILVER_SCHEMA.fields]
 
@@ -39,12 +39,13 @@ def parse_to_silver(
     order-dependent ST..SE/current-claim accumulation is safe (SURVEY
     §7.3 risk 1).
 
-    A file that makes the parser raise does NOT vanish: it yields one
-    dead-letter row (transaction_type 'ERR', quality 0, invalid, the
-    error in validation_results), so corrupt inputs stay visible to
-    the data-quality mart instead of silently shrinking row counts —
-    the reference records the same failures in its bronze tracking
-    table (bronze_x12_ingestion.py status columns).
+    A file that makes the parser raise does NOT vanish: it yields its
+    ``x12.parsers.dead_letter_row`` (transaction_type 'ERR', quality
+    0, invalid, the error in validation_results), so corrupt inputs
+    stay visible to the data-quality mart instead of silently
+    shrinking row counts — the reference records the same failures in
+    its bronze tracking table (bronze_x12_ingestion.py status
+    columns).
     """
     if now is None:
         from datetime import datetime as _dt
@@ -53,8 +54,6 @@ def parse_to_silver(
         now = _dt.now(_tz.utc).replace(tzinfo=None)
 
     def parse_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json
-
         for pdf in batches:
             rows: list[dict] = []
             for file_name, content in zip(pdf["file_name"], pdf["content"]):
@@ -63,33 +62,7 @@ def parse_to_silver(
                         parse_x12_file(file_name, content, batch_id=batch_id, now=now)
                     )
                 except Exception as exc:  # noqa: BLE001 - a corrupt file must not kill the batch
-                    rows.append(
-                        {
-                            "batch_id": batch_id,
-                            "file_name": file_name,
-                            "processing_timestamp": now,
-                            "interchange_control_number": "",
-                            "functional_group_number": "",
-                            "transaction_set_control_number": "",
-                            "transaction_type": "ERR",
-                            "sender_id": "",
-                            "receiver_id": "",
-                            "transaction_date": "",
-                            "parsed_data": "{}",
-                            "validation_results": json.dumps(
-                                {
-                                    "is_valid": False,
-                                    "quality_score": 0,
-                                    "issues": [f"parse failure: {type(exc).__name__}"],
-                                    "warnings": [],
-                                },
-                                sort_keys=True,
-                            ),
-                            "quality_score": 0,
-                            "is_valid": False,
-                            "processing_date": now.date(),
-                        }
-                    )
+                    rows.append(dead_letter_row(file_name, exc, batch_id, now))
             if rows:
                 yield pd.DataFrame(rows, columns=_SILVER_COLS)
 

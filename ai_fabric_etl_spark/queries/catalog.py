@@ -111,13 +111,12 @@ _PRIORITY = [
     # registry-wide guard) and STAY direct until green. ---
     "sample_token_budget",
     "dq_expectations_orders",
-    # --- r14 rotation (VERDICT r13 item 6): ten fp-composite
-    # residents take the freed slots — eight that have never (or not
+    # --- r14 rotation (VERDICT r13 item 6): eight fp-composite
+    # residents take the freed slots — six that have never (or not
     # since pre-r9) held a direct slot (source_sqlite_roundtrip r6/r7,
-    # export_wds_roundtrip never, lakehouse_iceberg_native_read r7,
-    # lakehouse_delta_native_read never, search_retrieval_metrics
-    # never, privacy_dp_sum never, sample_dsir_topk r7,
-    # dedup_keep_best never) plus the verdict's two other named
+    # export_wds_roundtrip never, search_retrieval_metrics never,
+    # privacy_dp_sum never, sample_dsir_topk r7, dedup_keep_best
+    # never) plus the verdict's two other named
     # candidates (text_trigram_backoff_nll r10, attribution_
     # linear_touch r10). Displaced: the r13 direct-greens above plus
     # affinity_brand_pairs / rfm_customer_segments (green r10-r13).
@@ -126,8 +125,6 @@ _PRIORITY = [
     # driver-visible in both positions. ---
     "source_sqlite_roundtrip",
     "export_wds_roundtrip",
-    "lakehouse_iceberg_native_read",
-    "lakehouse_delta_native_read",
     "search_retrieval_metrics",
     "privacy_dp_sum",
     "sample_dsir_topk",

@@ -180,7 +180,6 @@ FP_GROUPS: dict[str, list[str]] = {
         "x12_datasource_scan",
         "lakehouse_incremental_mart",
         "lakehouse_incremental_join_view",
-        "lakehouse_delta_native_read",
         "sketch_distinct_rollup",
         "quantile_sketch_prices",
         "zorder_curve_keys",
@@ -251,7 +250,6 @@ FP_GROUPS: dict[str, list[str]] = {
         "sample_stratified",
         "dedup_simhash_planted",
         "sample_hash_split",
-        "lakehouse_iceberg_native_read",
         "text_nb_classifier",
         "text_bpe_roundtrip",
         "search_hybrid_rrf",

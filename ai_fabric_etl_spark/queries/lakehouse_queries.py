@@ -73,65 +73,6 @@ def lakehouse_merge_orders(spark, sf_dir):
     return t.read()
 
 
-_DELTA_NATIVE_ORACLE = """
-WITH base AS (
-  SELECT o_orderkey, o_orderstatus, o_totalprice
-  FROM orders WHERE o_orderkey % 4 <> 3
-),
-upd AS (
-  SELECT o_orderkey, 'U' AS o_orderstatus, o_totalprice
-  FROM orders WHERE o_orderkey % 2 = 1
-),
-merged AS (
-  SELECT COALESCE(b.o_orderkey, u.o_orderkey) AS o_orderkey,
-         COALESCE(u.o_orderstatus, b.o_orderstatus) AS o_orderstatus,
-         COALESCE(u.o_totalprice, b.o_totalprice) AS o_totalprice
-  FROM base b FULL OUTER JOIN upd u ON b.o_orderkey = u.o_orderkey
-)
-SELECT o_orderstatus,
-       COUNT(*) AS n_orders,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price
-FROM merged
-GROUP BY o_orderstatus
-"""
-
-
-@register("lakehouse_delta_native_read", oracle=_DELTA_NATIVE_ORACLE)
-def lakehouse_delta_native_read(spark, sf_dir):
-    """Delta-protocol READ interop: the merge table's commits emit a
-    real _delta_log mirror (operators/merge.py), and this entry reads
-    the final snapshot back EXCLUSIVELY through the log replayer
-    (sources/delta_reader.read_delta_snapshot — the path a delta-spark
-    reader would take), never through the engine's own _LATEST
-    pointer. The oracle replays the merge + aggregate relationally, so
-    a log-emission or replay bug (missed remove, stale add, schema
-    drift) flips the value hash. (Reference reads Delta for acks:
-    generate_x12_acknowledgments.py:61; SURVEY §2.1 S5.)"""
-    from ai_fabric_etl_spark.sources.delta_reader import read_delta_snapshot
-
-    orders = _t(spark, sf_dir, "orders")
-    base = orders.filter(F.col("o_orderkey") % 4 != 3).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    upd = orders.filter(F.col("o_orderkey") % 2 == 1).select(
-        "o_orderkey",
-        F.lit("U").alias("o_orderstatus"),
-        "o_totalprice",
-    )
-    t = ParquetMergeTable(
-        spark, os.path.join(tempfile.mkdtemp(prefix="delta_native_"), "t")
-    )
-    t.overwrite(base)
-    t.merge(upd, keys=["o_orderkey"])
-    snap = read_delta_snapshot(spark, t.path)
-    return snap.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-        .cast("double")
-        .alias("total_price"),
-    )
-
-
 _SINK_ORACLE = """
 SELECT o_orderstatus,
        CAST(strftime(o_orderdate, '%Y') AS INTEGER) AS order_year,
@@ -1476,64 +1417,6 @@ def export_wds_roundtrip(spark, sf_dir):
         F.min("key").alias("first_key"),
         F.max("key").alias("last_key"),
     )
-
-
-_ICEBERG_NATIVE_ORACLE = """
-WITH base AS (
-  SELECT o_orderkey, o_orderstatus, o_totalprice
-  FROM orders WHERE o_orderkey % 3 <> 1
-),
-cur AS (SELECT * FROM base WHERE o_orderkey % 5 <> 0)
-SELECT 'v0' AS snapshot, o_orderstatus,
-       COUNT(*) AS n_orders,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price
-FROM base GROUP BY o_orderstatus
-UNION ALL
-SELECT 'current', o_orderstatus,
-       COUNT(*),
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-FROM cur GROUP BY o_orderstatus
-"""
-
-
-@register("lakehouse_iceberg_native_read", oracle=_ICEBERG_NATIVE_ORACLE)
-def lakehouse_iceberg_native_read(spark, sf_dir):
-    """Iceberg-v2 READ interop (sources/iceberg_mirror.py): commits
-    mirror full Iceberg metadata — metadata.json with field-id
-    schemas, Avro manifest lists and manifests written by the repo's
-    own codec — and this entry resolves BOTH the current snapshot and
-    a time-traveled snapshot 0 exclusively through that chain
-    (version-hint -> metadata.json -> manifest list -> manifests),
-    never the engine's _LATEST pointer. The oracle replays the
-    overwrite + DELETE relationally, so a manifest-emission or
-    resolution bug (stale file, missed delete, wrong snapshot schema)
-    flips the value hash. Together with lakehouse_delta_native_read
-    the same table is readable from both lakehouse ecosystems."""
-    from ai_fabric_etl_spark.sources.iceberg_mirror import (
-        read_iceberg_snapshot,
-    )
-
-    orders = _t(spark, sf_dir, "orders")
-    base = orders.filter(F.col("o_orderkey") % 3 != 1).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    t = ParquetMergeTable(
-        spark, os.path.join(tempfile.mkdtemp(prefix="iceberg_native_"), "t")
-    )
-    t.overwrite(base)
-    t.delete("o_orderkey % 5 = 0")
-
-    def agg(df, tag):
-        return df.groupBy("o_orderstatus").agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("total_price"),
-        ).select(F.lit(tag).alias("snapshot"), "*")
-
-    v0 = read_iceberg_snapshot(spark, t.path, snapshot_id=0)
-    cur = read_iceberg_snapshot(spark, t.path)
-    return agg(v0, "v0").unionByName(agg(cur, "current"))
 
 
 _AES_ORACLE = """

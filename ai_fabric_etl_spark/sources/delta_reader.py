@@ -6,8 +6,7 @@ numbered JSON commits of add/remove/metaData actions, optionally
 compacted into a parquet checkpoint referenced by ``_last_checkpoint``.
 Replaying it needs no library — this module resolves a snapshot's live
 file set and reads it as a plain parquet scan, so tables written by
-real Delta writers (or by ParquetMergeTable's write-through mirror,
-operators/merge.py) are readable here natively.
+real Delta writers are readable here natively.
 
 Reference anchor: the reference reads Delta tables for ack generation
 (generate_x12_acknowledgments.py:61); SURVEY §2.1 S5.

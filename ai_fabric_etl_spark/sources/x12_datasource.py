@@ -16,8 +16,9 @@ Scale/engine notes:
 - the driver stamps ``processing_timestamp`` ONCE in the reader (the
   reader object is pickled to executors), keeping retries/speculation
   deterministic — the same r4 fix the pipeline path carries;
-- a file that fails to parse yields its dead-letter ERR row (same
-  contract as parse_to_silver), never a lost file;
+- a file that fails to read or parse yields its
+  ``x12.parsers.dead_letter_row`` (the contract every parse path
+  shares), never a lost file;
 - rows stream out as plain tuples in schema order; Spark converts
   per-batch via Arrow.
 
@@ -138,10 +139,9 @@ class X12Reader(DataSourceReader):
         return [X12FilesPartition(c) for c in chunks]
 
     def read(self, partition: X12FilesPartition):
-        import json
         import os
 
-        from ai_fabric_etl_spark.x12.parsers import parse_x12_file
+        from ai_fabric_etl_spark.x12.parsers import dead_letter_row, parse_x12_file
 
         cols = [f.name for f in SILVER_SCHEMA.fields]
         for path in partition.files:
@@ -153,35 +153,7 @@ class X12Reader(DataSourceReader):
                     name, text, batch_id=self.batch_id, now=self.now
                 )
             except Exception as exc:  # noqa: BLE001 - dead-letter, not data loss
-                rows = [
-                    {
-                        "batch_id": self.batch_id,
-                        "file_name": name,
-                        "processing_timestamp": self.now,
-                        "interchange_control_number": "",
-                        "functional_group_number": "",
-                        "transaction_set_control_number": "",
-                        "transaction_type": "ERR",
-                        "sender_id": "",
-                        "receiver_id": "",
-                        "transaction_date": "",
-                        "parsed_data": "{}",
-                        "validation_results": json.dumps(
-                            {
-                                "is_valid": False,
-                                # same shape as the pipeline dead letter
-                                # (validate.py contract): "issues", not
-                                # "errors"
-                                "issues": [f"{type(exc).__name__}: {exc}"],
-                                "warnings": [],
-                                "quality_score": 0,
-                            }
-                        ),
-                        "quality_score": 0,
-                        "is_valid": False,
-                        "processing_date": self.now.date(),
-                    }
-                ]
+                rows = [dead_letter_row(name, exc, self.batch_id, self.now)]
             for r in rows:
                 yield tuple(r.get(c) for c in cols)
 

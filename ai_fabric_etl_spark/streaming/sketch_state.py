@@ -101,31 +101,19 @@ def compact_state(
 ) -> dict:
     """Bound a sketch-state table's footprint after many micro-batches
     — the maintenance pass a long-lived stream schedules every N
-    epochs (VERDICT r7 item 6):
-
-    - ``vacuum(keep_last)`` drops old ``v={n}`` data directories (the
-      state VALUE lives entirely in the newest version — every fold
-      overwrites — so history is pure replay insurance);
-    - ``expire_iceberg_snapshots(keep_last)`` truncates the mirror's
-      snapshot list and deletes orphaned manifests — without it each
-      commit rewrites metadata.json with EVERY prior snapshot, an
-      O(epochs) cost per fold that compounds to O(epochs²);
-    - the Delta mirror needs no action here: it checkpoints itself
-      every ``_CHECKPOINT_INTERVAL`` commits, so replay seeds from the
-      newest checkpoint and reads at most one interval of JSON tail.
+    epochs (VERDICT r7 item 6): ``vacuum(keep_last)`` drops old
+    ``v={n}`` data directories (the state VALUE lives entirely in the
+    newest version — every fold overwrites — so history is pure replay
+    insurance).
 
     The exactly-once guard is untouched: ``last_epoch`` reads only the
-    ``_LATEST`` pointer (O(1) at any epoch count), and vacuum/expiry
-    never move it. Returns counters from both passes.
+    ``_LATEST`` pointer (O(1) at any epoch count), and vacuum never
+    moves it. Returns ``vacuumed_versions`` (removed by this pass) and
+    ``retained`` (versions still readable).
     """
     table = ParquetMergeTable(spark, state_dir)
     removed = table.vacuum(keep_last=keep_last)
-    from ai_fabric_etl_spark.sources.iceberg_mirror import (
-        expire_iceberg_snapshots,
-    )
-
-    ice = expire_iceberg_snapshots(state_dir, keep_last=keep_last)
-    return {"vacuumed_versions": len(removed), **ice}
+    return {"vacuumed_versions": len(removed), "retained": len(table.versions())}
 
 
 __all__ = [

@@ -458,3 +458,40 @@ def parse_x12_file(
         elif current_set is not None:
             current_set.append(seg)
     return rows
+
+
+def dead_letter_row(
+    file_name: str, exc: BaseException, batch_id: str, now: datetime
+) -> dict:
+    """The silver row for a file whose read or parse raised ``exc``.
+
+    Every parse access path (``parse_to_silver``, the ``x12`` data
+    source, the ``parse_x12`` UDTF) emits exactly this row for a failed
+    file, so a corrupt input stays visible to the data-quality mart as
+    one invalid, quality-0 ``ERR`` transaction carrying the error in
+    ``validation_results`` instead of vanishing. An input that parses
+    to zero ST..SE sets is not a failure and yields no row anywhere.
+    """
+    validation = {
+        "is_valid": False,
+        "quality_score": 0,
+        "issues": [f"parse failure: {type(exc).__name__}: {exc}"],
+        "warnings": [],
+    }
+    return {
+        "batch_id": batch_id,
+        "file_name": file_name,
+        "processing_timestamp": now,
+        "interchange_control_number": "",
+        "functional_group_number": "",
+        "transaction_set_control_number": "",
+        "transaction_type": "ERR",
+        "sender_id": "",
+        "receiver_id": "",
+        "transaction_date": "",
+        "parsed_data": "{}",
+        "validation_results": json.dumps(validation, sort_keys=True),
+        "quality_score": 0,
+        "is_valid": False,
+        "processing_date": now.date(),
+    }

@@ -19,27 +19,29 @@ tests/test_x12_parser.py.
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 from pyspark.sql.functions import udtf
 
 from ai_fabric_etl_spark.schemas import SILVER_SCHEMA
-from ai_fabric_etl_spark.x12.parsers import parse_x12_file
+from ai_fabric_etl_spark.x12.parsers import dead_letter_row, parse_x12_file
 
 _COLS = [f.name for f in SILVER_SCHEMA.fields]
 
 
 @udtf(returnType=SILVER_SCHEMA)
 class ParseX12:
-    """One output row per ST..SE transaction set in ``content``;
-    corrupt input yields zero rows (same contract as the silver
-    batch parser's per-file exception fence)."""
+    """One output row per ST..SE transaction set in ``content``; input
+    that makes the parser raise (e.g. NULL content) yields its
+    ``dead_letter_row`` — the same contract as the silver batch
+    parser's per-file exception fence."""
 
     def eval(self, file_name: str, content: str):  # noqa: D102
-        if file_name is None or content is None:
-            return
+        now = datetime.now(timezone.utc).replace(tzinfo=None)
         try:
-            rows = parse_x12_file(file_name, content, batch_id="sql")
-        except Exception:  # noqa: BLE001 - corrupt file -> no rows, not a query abort
-            return
+            rows = parse_x12_file(file_name, content, batch_id="sql", now=now)
+        except Exception as exc:  # noqa: BLE001 - corrupt file -> dead letter, not a query abort
+            rows = [dead_letter_row(file_name, exc, "sql", now)]
         for r in rows:
             yield tuple(r[c] for c in _COLS)
 

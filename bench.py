@@ -92,7 +92,6 @@ HEADLINE = [
     "text_nb_classifier",          # NB quality classifier train + score
     "sample_dsir_topk",            # DSIR hashed-bigram importance selection
     "emb_random_projection",       # JL sign projection (pure codegen)
-    "lakehouse_iceberg_native_read",  # commit + iceberg-metadata read path
     "sample_token_budget",         # per-domain token-budget prefix cut (r8)
     "dedup_soft_weights",          # inverse-cluster-size soft dedup (r8)
     "emb_neardup_incremental",     # O(batch) near-dup vs persisted index (r8)

@@ -1,41 +1,67 @@
 """Native Delta-log reader (sources/delta_reader.py): replay-based
-snapshot reads without delta-spark, against (a) this engine's own
-write-through mirror and (b) hand-built foreign tables exercising
-partitioned layouts, checkpoints, and protocol gating."""
+snapshot reads without delta-spark, against hand-built foreign tables
+exercising partitioned layouts, checkpoints, schema evolution, time
+travel and protocol gating."""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
-from ai_fabric_etl_spark.operators.merge import ParquetMergeTable
 from ai_fabric_etl_spark.sources.delta_reader import (
     DeltaProtocolError,
     read_delta_snapshot,
 )
 
 
+_PROTOCOL = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
+
+
 def _rowset(df):
     return sorted(tuple(str(v) for v in r) for r in df.collect())
 
 
-def test_reads_own_mirror_current_and_version_as_of(spark, tmp_path):
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl"))
-    t.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], "k int, s string"))
-    t.merge(spark.createDataFrame([(2, "B"), (3, "c")], "k int, s string"),
-            keys=["k"])
-    t.delete("k = 1")
+def _meta(fields):
+    """metaData action for an unpartitioned table of (name, type)."""
+    schema = {"type": "struct", "fields": [
+        {"name": n, "type": t, "nullable": True, "metadata": {}}
+        for n, t in fields
+    ]}
+    return {"metaData": {
+        "id": "foreign-t", "format": {"provider": "parquet", "options": {}},
+        "schemaString": json.dumps(schema),
+        "partitionColumns": [], "configuration": {},
+    }}
 
-    got = read_delta_snapshot(spark, t.path)
-    assert _rowset(got) == _rowset(t.read())
-    # VERSION AS OF replays only the prefix
-    got_v0 = read_delta_snapshot(spark, t.path, version=0)
-    assert _rowset(got_v0) == _rowset(t.read(version=0))
-    got_v1 = read_delta_snapshot(spark, t.path, version=1)
-    assert _rowset(got_v1) == _rowset(t.read(version=1))
+
+def _add_file(spark, root, name, rows, ddl):
+    """Write ``rows`` as the single data file ``root/name``; returns
+    its add action."""
+    d = f"{root}/_build_{name}"
+    spark.createDataFrame(rows, ddl).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(d)
+    src = next(f for f in os.listdir(d) if f.endswith(".parquet"))
+    os.replace(f"{d}/{src}", f"{root}/{name}")
+    shutil.rmtree(d)
+    return {"add": {"path": name, "partitionValues": {},
+                    "size": os.stat(f"{root}/{name}").st_size,
+                    "modificationTime": 0, "dataChange": True}}
+
+
+def _remove(add):
+    return {"remove": {"path": add["add"]["path"], "deletionTimestamp": 0,
+                       "dataChange": True}}
+
+
+def _commit(root, v, actions):
+    os.makedirs(f"{root}/_delta_log", exist_ok=True)
+    with open(f"{root}/_delta_log/{v:020d}.json", "w") as fh:
+        fh.write("".join(json.dumps(a) + "\n" for a in actions))
 
 
 def _write_foreign_partitioned(spark, root):
@@ -96,36 +122,27 @@ def test_reads_foreign_partitioned_table(spark, tmp_path):
 def test_checkpoint_replay(spark, tmp_path):
     """_last_checkpoint + checkpoint parquet seed the snapshot; JSON
     commits after the checkpoint still apply (the add in commit 2 and
-    the remove of a checkpointed file)."""
-    t = ParquetMergeTable(spark, str(tmp_path / "ck"))
-    t.overwrite(spark.createDataFrame([(1, "a")], "k int, s string"))
-    t.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], "k int, s string"))
-    log_dir = f"{t.path}/_delta_log"
+    the remove of a checkpointed file), and VERSION AS OF the
+    checkpoint version resolves from the checkpoint alone."""
+    root = str(tmp_path / "ck")
+    ddl = "k int, s string"
+    meta = _meta([("k", "integer"), ("s", "string")])
+    a = _add_file(spark, root, "a.parquet", [(1, "a")], ddl)
+    b = _add_file(spark, root, "b.parquet", [(1, "a"), (2, "b")], ddl)
+    _commit(root, 0, [_PROTOCOL, meta, a])
+    _commit(root, 1, [b, _remove(a)])
+    log_dir = f"{root}/_delta_log"
 
-    # build a checkpoint at version 1 from the json commits
-    actions = []
-    for v in (0, 1):
-        with open(f"{log_dir}/{v:020d}.json") as fh:
-            actions += [json.loads(line) for line in fh if line.strip()]
-    meta = next(a["metaData"] for a in actions if "metaData" in a)
-    live = {}
-    for a in actions:
-        if "add" in a:
-            live[a["add"]["path"]] = a["add"]
-        elif "remove" in a:
-            live.pop(a["remove"]["path"], None)
+    # checkpoint at version 1: protocol, metaData and the live add
     ck_rows = [
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2},
+        {"protocol": _PROTOCOL["protocol"],
          "metaData": None, "add": None, "remove": None},
         {"protocol": None, "metaData": {
-            "id": meta["id"], "schemaString": meta["schemaString"],
+            "id": meta["metaData"]["id"],
+            "schemaString": meta["metaData"]["schemaString"],
             "partitionColumns": [], "configuration": {},
         }, "add": None, "remove": None},
-        *[{"protocol": None, "metaData": None,
-           "add": {"path": p, "partitionValues": {},
-                   "size": a["size"], "modificationTime": 0,
-                   "dataChange": False},
-           "remove": None} for p, a in live.items()],
+        {"protocol": None, "metaData": None, "add": b["add"], "remove": None},
     ]
     ck_schema = (
         "protocol struct<minReaderVersion:int,minWriterVersion:int>, "
@@ -149,11 +166,40 @@ def test_checkpoint_replay(spark, tmp_path):
     os.remove(f"{log_dir}/{1:020d}.json")
 
     # a post-checkpoint commit
-    t.overwrite(spark.createDataFrame([(9, "z")], "k int, s string"))
+    c = _add_file(spark, root, "c.parquet", [(9, "z")], ddl)
+    _commit(root, 2, [c, _remove(b)])
 
-    got = read_delta_snapshot(spark, t.path)
-    assert _rowset(got) == _rowset(t.read())
-    assert {r.k for r in got.collect()} == {9}
+    got = read_delta_snapshot(spark, root)
+    assert _rowset(got) == [("9", "z")]
+    got_ck = read_delta_snapshot(spark, root, version=1)
+    assert _rowset(got_ck) == [("1", "a"), ("2", "b")]
+
+
+def test_version_as_of_replays_prefix_with_its_schema(spark, tmp_path):
+    """A later metaData action evolves the schema: the current snapshot
+    reads the evolved columns, and VERSION AS OF 0 replays only the
+    first commit, applying the ORIGINAL schema."""
+    root = str(tmp_path / "evo")
+    a = _add_file(spark, root, "a.parquet", [(1, "a"), (2, "b")],
+                  "id long, name string")
+    _commit(root, 0, [
+        _PROTOCOL, _meta([("id", "long"), ("name", "string")]), a,
+    ])
+    b = _add_file(spark, root, "b.parquet",
+                  [(1, "a", None), (2, "b2", 99), (3, "c", 42)],
+                  "id long, name string, score long")
+    _commit(root, 1, [
+        _meta([("id", "long"), ("name", "string"), ("score", "long")]),
+        b, _remove(a),
+    ])
+
+    got = read_delta_snapshot(spark, root)
+    assert got.columns == ["id", "name", "score"]
+    assert _rowset(got) == [("1", "a", "None"), ("2", "b2", "99"),
+                            ("3", "c", "42")]
+    got_v0 = read_delta_snapshot(spark, root, version=0)
+    assert got_v0.columns == ["id", "name"]
+    assert _rowset(got_v0) == [("1", "a"), ("2", "b")]
 
 
 def test_protocol_gate(spark, tmp_path):
@@ -169,100 +215,6 @@ def test_protocol_gate(spark, tmp_path):
         }}) + "\n")
     with pytest.raises(DeltaProtocolError):
         read_delta_snapshot(spark, root)
-
-
-def test_mirror_schema_evolution_emits_new_metadata(spark, tmp_path):
-    """ADVICE r5 (medium): a schema-evolving merge must append a fresh
-    metaData action — real Delta writers do — so native reads see the
-    evolved columns instead of applying the stale v0 schema."""
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl_evo_log"))
-    t.overwrite(spark.createDataFrame([(1, "a"), (2, "b")],
-                                      "id long, name string"))
-    t.merge(
-        spark.createDataFrame([(2, "b2", 99), (3, "c", 42)],
-                              "id long, name string, score long"),
-        keys=["id"],
-    )
-
-    log_dir = os.path.join(t.path, "_delta_log")
-    metas = []
-    for name in sorted(os.listdir(log_dir)):
-        if not (name.endswith(".json") and name[:-5].isdigit()):
-            continue
-        with open(os.path.join(log_dir, name)) as fh:
-            for line in fh:
-                if line.strip():
-                    a = json.loads(line)
-                    if "metaData" in a:
-                        metas.append((int(name[:-5]), a["metaData"]))
-    assert len(metas) == 2, "schema change must re-emit metaData"
-    assert metas[0][0] == 0 and metas[1][0] == t._version()
-    fields_v1 = [f["name"]
-                 for f in json.loads(metas[1][1]["schemaString"])["fields"]]
-    assert "score" in fields_v1
-    # same table uuid across metaData generations
-    assert metas[0][1]["id"] == metas[1][1]["id"]
-
-    # native read sees the evolved column, and matches the engine read
-    got = read_delta_snapshot(spark, t.path)
-    assert "score" in got.columns
-    assert _rowset(got) == _rowset(t.read())
-    # VERSION AS OF 0 applies the ORIGINAL schema
-    got_v0 = read_delta_snapshot(spark, t.path, version=0)
-    assert "score" not in got_v0.columns
-    assert _rowset(got_v0) == _rowset(t.read(version=0))
-
-    # a non-evolving follow-up commit must NOT emit another metaData
-    t.merge(spark.createDataFrame([(4, "d")], "id long, name string"),
-            keys=["id"])
-    n_meta = 0
-    for name in sorted(os.listdir(log_dir)):
-        if name.endswith(".json") and name[:-5].isdigit():
-            with open(os.path.join(log_dir, name)) as fh:
-                n_meta += sum(1 for line in fh
-                              if line.strip() and "metaData" in json.loads(line))
-    assert n_meta == 2
-    assert _rowset(read_delta_snapshot(spark, t.path)) == _rowset(t.read())
-
-
-def test_mirror_catchup_after_vacuum_derives_removes_from_log(spark, tmp_path):
-    """ADVICE r5: crash-gap catch-up must derive its remove set from
-    the log's live files, not the vacuumed ``v={n-1}`` directory —
-    otherwise stale adds stay live forever and the snapshot references
-    deleted files."""
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl_gap"))
-    t.overwrite(spark.createDataFrame([(1, "a")], "k int, s string"))
-    t.overwrite(spark.createDataFrame([(2, "b")], "k int, s string"))
-    log_dir = os.path.join(t.path, "_delta_log")
-    # crash between pointer swap and mirror emit: v1's entry is lost
-    os.remove(os.path.join(log_dir, f"{1:020d}.json"))
-    # vacuum then deletes the v=0 directory before the next commit
-    assert t.vacuum(keep_last=1) == [0]
-    assert not os.path.isdir(os.path.join(t.path, "v=0"))
-
-    # next commit: catch-up re-derives v1 (removing v0's files purely
-    # from the log) then emits v2
-    t.overwrite(spark.createDataFrame([(3, "c")], "k int, s string"))
-
-    got = read_delta_snapshot(spark, t.path)
-    assert _rowset(got) == _rowset(t.read())
-    # every live path in the log must exist on disk
-    live: set[str] = set()
-    for name in sorted(os.listdir(log_dir)):
-        if not (name.endswith(".json") and name[:-5].isdigit()):
-            continue
-        with open(os.path.join(log_dir, name)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if "add" in a:
-                    live.add(a["add"]["path"])
-                elif "remove" in a:
-                    live.discard(a["remove"]["path"])
-    assert live, "snapshot must not be empty"
-    for p in live:
-        assert os.path.exists(os.path.join(t.path, p)), p
 
 
 def test_percent_encoded_paths_roundtrip(spark, tmp_path):
@@ -306,73 +258,3 @@ def test_percent_encoded_paths_roundtrip(spark, tmp_path):
             "path": enc, "deletionTimestamp": 0,
             "dataChange": True}}) + "\n")
     assert read_delta_snapshot(spark, root).count() == 0
-
-
-def test_mirror_writes_checkpoints_and_reader_seeds_from_them(spark, tmp_path):
-    """Every _CHECKPOINT_INTERVAL commits the mirror writes a parquet
-    checkpoint + _last_checkpoint; a reader can then reconstruct the
-    snapshot even when all earlier JSON commits are gone (bounded
-    replay, as real Delta intends)."""
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl_ckpt"))
-    interval = ParquetMergeTable._CHECKPOINT_INTERVAL
-    for i in range(interval + 2):  # versions 0 .. interval+1
-        t.overwrite(spark.createDataFrame([(i, f"s{i}")], "k int, s string"))
-    log_dir = os.path.join(t.path, "_delta_log")
-    ck = os.path.join(log_dir, f"{interval:020d}.checkpoint.parquet")
-    assert os.path.exists(ck)
-    with open(os.path.join(log_dir, "_last_checkpoint")) as fh:
-        assert json.load(fh)["version"] == interval
-
-    # native read agrees with the engine before any pruning
-    assert _rowset(read_delta_snapshot(spark, t.path)) == _rowset(t.read())
-
-    # drop every JSON commit the checkpoint covers: replay must seed
-    # from the checkpoint and apply only the later commits
-    for v in range(interval + 1):
-        os.remove(os.path.join(log_dir, f"{v:020d}.json"))
-    got = read_delta_snapshot(spark, t.path)
-    assert _rowset(got) == _rowset(t.read())
-    assert {r.k for r in got.collect()} == {interval + 1}
-    # VERSION AS OF the checkpoint version itself still resolves
-    got_ck = read_delta_snapshot(spark, t.path, version=interval)
-    assert {r.k for r in got_ck.collect()} == {interval}
-
-
-def test_catchup_commit_stamps_each_versions_own_schema(spark, tmp_path):
-    """A crash gap spanning a schema evolution must re-derive the
-    missing commit with THAT version's footer schema, not the current
-    df's — otherwise native VERSION AS OF reads of the evolved history
-    drop or invent columns vs t.read(version)."""
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl_gap_evo"))
-    t.overwrite(spark.createDataFrame([(1, "a")], "id long, name string"))
-    t.merge(  # v1 evolves: adds score
-        spark.createDataFrame([(2, "b", 9)], "id long, name string, score long"),
-        keys=["id"],
-    )
-    log_dir = os.path.join(t.path, "_delta_log")
-    os.remove(os.path.join(log_dir, f"{1:020d}.json"))  # crash gap at v1
-    # v2: a further merge WITHOUT the evolved column in the source
-    t.merge(spark.createDataFrame([(3, "c")], "id long, name string"),
-            keys=["id"])
-
-    # catch-up re-emitted v1 with the evolved schema from v1's footers
-    metas = {}
-    for name in sorted(os.listdir(log_dir)):
-        if name.endswith(".json") and name[:-5].isdigit():
-            with open(os.path.join(log_dir, name)) as fh:
-                for line in fh:
-                    if line.strip():
-                        a = json.loads(line)
-                        if "metaData" in a:
-                            metas[int(name[:-5])] = [
-                                f["name"] for f in json.loads(
-                                    a["metaData"]["schemaString"])["fields"]
-                            ]
-    assert 0 in metas and "score" not in metas[0]
-    assert 1 in metas and "score" in metas[1], metas
-    # v2 keeps the evolved schema: no third metaData
-    assert 2 not in metas
-
-    for v in (0, 1, 2):
-        assert _rowset(read_delta_snapshot(spark, t.path, version=v)) == \
-            _rowset(t.read(version=v)), v

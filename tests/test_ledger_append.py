@@ -6,8 +6,8 @@ filesystems without hardlinks).
 
 Under the r13 MANIFEST layout each version dir holds only its batch's
 file(s), so per-commit growth is directly observable: O(1) directory
-entries, flat new bytes, native append-shaped Delta/Iceberg mirror
-commits, legacy-table in-place upgrade, and lost-race/crash recovery.
+entries, flat new bytes, legacy-table in-place upgrade, and
+lost-race/crash recovery.
 The inode-based measurement (new bytes = files whose inode no earlier
 version held) is kept — it is layout-agnostic, so it also covers
 pre-manifest tables.
@@ -196,101 +196,6 @@ def test_append_o1_directory_entries_per_commit(spark, tmp_path):
     # dir's bytes, flat across commits
     new_bytes = _new_bytes_per_version(path)
     assert max(new_bytes) <= 3 * min(new_bytes)
-
-
-def test_append_delta_mirror_is_native_append_shape(spark, tmp_path):
-    """The Delta log entry for an append adds ONLY the new files and
-    removes nothing (real Delta append shape, O(batch) log lines);
-    replaying the full log yields exactly the manifest's live set."""
-    import json
-
-    path = str(tmp_path / "ledger")
-    t = ParquetMergeTable(spark, path)
-    for e in range(4):
-        t.append(
-            spark.createDataFrame([(e,)], "id long"), epoch=e, app_id="a"
-        )
-    log_dir = os.path.join(path, "_delta_log")
-    logs = sorted(f for f in os.listdir(log_dir) if f.endswith(".json"))
-    assert len(logs) == 4
-    live = set()
-    for i, name in enumerate(logs):
-        adds = removes = 0
-        with open(os.path.join(log_dir, name), encoding="utf-8") as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if "add" in a:
-                    adds += 1
-                    live.add(a["add"]["path"])
-                elif "remove" in a:
-                    removes += 1
-                    live.discard(a["remove"]["path"])
-        assert adds == 1, (name, adds)  # one new file per append
-        assert removes == 0, (name, removes)
-    manifest_paths = {
-        e["path"] for e in t._snapshot_entries(t._version())
-    }
-    assert live == manifest_paths
-    # a compaction then removes everything and adds the fresh file
-    t.compact(target_files=1)
-    last = sorted(
-        f for f in os.listdir(log_dir) if f.endswith(".json")
-    )[-1]
-    adds = removes = 0
-    with open(os.path.join(log_dir, last), encoding="utf-8") as fh:
-        for line in fh:
-            if line.strip():
-                a = json.loads(line)
-                adds += "add" in a
-                removes += "remove" in a
-    assert adds == 1 and removes == 4
-
-
-def test_append_iceberg_mirror_reuses_prior_manifests(spark, tmp_path):
-    """The Iceberg snapshot for an append writes ONE new manifest (the
-    batch's files) and carries the prior snapshot's manifests forward
-    in its manifest list — the shape a real Iceberg append commits —
-    and the from-scratch conformance reader resolves the full table
-    through it."""
-    from ai_fabric_etl_spark.sources.iceberg_mirror import (
-        read_iceberg_snapshot,
-    )
-
-    path = str(tmp_path / "ledger")
-    t = ParquetMergeTable(spark, path)
-    for e in range(3):
-        t.append(
-            spark.createDataFrame([(e,)], "id long"), epoch=e, app_id="a"
-        )
-    import json
-
-    meta_dir = os.path.join(path, "metadata")
-    hint = int(open(os.path.join(meta_dir, "version-hint.text")).read())
-    meta = json.load(open(os.path.join(meta_dir, f"v{hint}.metadata.json")))
-    snaps = {s["snapshot-id"]: s for s in meta["snapshots"]}
-    assert snaps[2]["summary"]["operation"] == "append"
-    assert snaps[2]["summary"]["added-data-files"] == "1"
-    # manifest list length grows with the appends (prior manifests
-    # carried forward + one new)
-    from ai_fabric_etl_spark.sources.iceberg_mirror import (
-        _MANIFEST_FILE_STRUCT,
-        _read_avro_rows,
-    )
-
-    assert len(_read_avro_rows(
-        snaps[2]["manifest-list"], _MANIFEST_FILE_STRUCT)) == 3
-    # native read == table read, current and time travel
-    got = sorted(
-        r.id for r in read_iceberg_snapshot(spark, path).collect()
-    )
-    assert got == [0, 1, 2]
-    got1 = sorted(
-        r.id
-        for r in read_iceberg_snapshot(spark, path, snapshot_id=1).collect()
-    )
-    assert got1 == [0, 1]
 
 
 def test_legacy_hardlink_table_upgrades_in_place(spark, tmp_path):

@@ -446,367 +446,3 @@ def test_schema_changes_and_small_files_report(spark, tmp_path):
     frag.compact(target_files=1)
     rep2 = small_files_report(frag, min_rows=500)
     assert rep2["n_files"] == 1 and rep2["n_small"] == 0
-
-
-def test_delta_log_format_conformance(spark, tmp_path):
-    """VERDICT r4 item 7: every commit mirrors a minimal Delta
-    transaction log entry (protocol 1/2, add/remove actions, no DVs)
-    per the public PROTOCOL.md. Contiguous numbered commits, protocol +
-    metaData in commit 0, spec-required action fields, and replaying
-    add/remove reconstructs exactly the current snapshot's files."""
-    import glob as _glob
-    import json
-    import os
-
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl_delta"))
-    t.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], "k int, s string"))
-    t.merge(spark.createDataFrame([(2, "B"), (3, "c")], "k int, s string"),
-            keys=["k"])
-    t.delete("k = 1")
-    t.compact(target_files=1)
-
-    log_dir = os.path.join(t.path, "_delta_log")
-    logs = sorted(
-        f for f in os.listdir(log_dir) if f.endswith(".json")
-    )
-    # contiguous zero-padded commit files 0..current version
-    assert logs == [f"{v:020d}.json" for v in range(t._version() + 1)]
-
-    def actions(v):
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            return [json.loads(line) for line in fh if line.strip()]
-
-    # commit 0: protocol + metaData with spec-required fields
-    a0 = actions(0)
-    protos = [a["protocol"] for a in a0 if "protocol" in a]
-    metas = [a["metaData"] for a in a0 if "metaData" in a]
-    assert len(protos) == 1 and len(metas) == 1
-    assert protos[0] == {"minReaderVersion": 1, "minWriterVersion": 2}
-    meta = metas[0]
-    for field in ("id", "format", "schemaString", "partitionColumns",
-                  "configuration"):
-        assert field in meta, f"metaData missing {field}"
-    assert meta["format"]["provider"] == "parquet"
-    schema = json.loads(meta["schemaString"])
-    assert schema["type"] == "struct"
-    assert [f["name"] for f in schema["fields"]] == ["k", "s"]
-
-    # replay: file set after applying every add/remove == live snapshot
-    live: set[str] = set()
-    for v in range(t._version() + 1):
-        for a in actions(v):
-            if "add" in a:
-                add = a["add"]
-                for field in ("path", "partitionValues", "size",
-                              "modificationTime", "dataChange"):
-                    assert field in add, f"add missing {field}"
-                full = os.path.join(t.path, add["path"])
-                assert os.path.exists(full), add["path"]
-                assert add["size"] == os.stat(full).st_size
-                live.add(add["path"])
-            elif "remove" in a:
-                rm = a["remove"]
-                assert "path" in rm and "dataChange" in rm
-                live.discard(rm["path"])
-    current = {
-        f"v={t._version()}/{os.path.basename(p)}"
-        for p in _glob.glob(os.path.join(t.path, f"v={t._version()}", "*.parquet"))
-    }
-    assert live == current
-
-    # the reconstructed snapshot reads back as the live table
-    rows_log = sorted(
-        tuple(r) for r in spark.read.parquet(
-            *[os.path.join(t.path, p) for p in sorted(live)]
-        ).collect()
-    )
-    rows_live = sorted(tuple(r) for r in t.read().collect())
-    assert rows_log == rows_live
-
-    # crash-gap catch-up: lose the latest mirror entry, commit again —
-    # the gap is re-derived from the retained version directory
-    os.remove(os.path.join(log_dir, logs[-1]))
-    t.overwrite(t.read())
-    logs2 = sorted(f for f in os.listdir(log_dir) if f.endswith(".json"))
-    assert logs2 == [f"{v:020d}.json" for v in range(t._version() + 1)]
-
-
-def test_iceberg_mirror_snapshots_match_table(spark, tmp_path):
-    """Every commit (overwrite, MERGE, DELETE, OPTIMIZE, schema
-    evolution) mirrors an Iceberg-v2 snapshot; the from-scratch reader
-    (version-hint -> metadata.json -> Avro manifest list -> Avro
-    manifests -> parquet) must reproduce table.read() for the current
-    AND every historical snapshot."""
-    from ai_fabric_etl_spark.sources.iceberg_mirror import (
-        read_iceberg_snapshot,
-    )
-
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl_ice"))
-    t.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], "k int, s string"))
-    t.merge(spark.createDataFrame([(2, "B"), (3, "c")], "k int, s string"),
-            keys=["k"])
-    t.delete("k = 1")
-    t.compact(target_files=1)
-    t.overwrite(
-        t.read().withColumn("extra", F.lit(7).cast("long"))
-    )
-    for v in range(t._version() + 1):
-        got = sorted(
-            tuple(r) for r in
-            read_iceberg_snapshot(spark, t.path, snapshot_id=v).collect()
-        )
-        want = sorted(tuple(r) for r in t.read(version=v).collect())
-        assert got == want, f"snapshot {v}"
-    cur = sorted(tuple(r)
-                 for r in read_iceberg_snapshot(spark, t.path).collect())
-    assert cur == sorted(tuple(r) for r in t.read().collect())
-
-
-def test_iceberg_metadata_conformance(spark, tmp_path):
-    """Spec-level checks on the emitted metadata: required
-    metadata.json fields, positive unique field-ids, monotonic
-    sequence numbers, manifest-list lengths/counts that match the real
-    Avro files, and per-file record counts that sum to the snapshot
-    row count."""
-    import json
-    import os
-
-    from ai_fabric_etl_spark.sources.iceberg_mirror import (
-        _MANIFEST_ENTRY_STRUCT,
-        _MANIFEST_FILE_STRUCT,
-        _read_avro_rows,
-    )
-
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl_ice2"))
-    t.overwrite(spark.range(0, 57).selectExpr("id", "id % 5 as g"))
-    t.overwrite(spark.range(0, 31).selectExpr("id", "id % 5 as g"))
-
-    md = os.path.join(t.path, "metadata")
-    with open(os.path.join(md, "version-hint.text")) as fh:
-        hint = int(fh.read())
-    assert hint == t._version()
-    meta = json.load(open(os.path.join(md, f"v{hint}.metadata.json")))
-    for key in ("format-version", "table-uuid", "location",
-                "last-sequence-number", "last-updated-ms",
-                "last-column-id", "current-schema-id", "schemas",
-                "default-spec-id", "partition-specs", "last-partition-id",
-                "default-sort-order-id", "sort-orders",
-                "current-snapshot-id", "snapshots", "snapshot-log"):
-        assert key in meta, f"metadata.json missing {key}"
-    assert meta["format-version"] == 2
-    ids = [f["id"] for s in meta["schemas"] for f in s["fields"]]
-    assert all(i > 0 for i in ids)
-    per_schema = [
-        [f["id"] for f in s["fields"]] for s in meta["schemas"]
-    ]
-    for sids in per_schema:
-        assert len(sids) == len(set(sids))
-    assert meta["last-column-id"] >= max(ids)
-    seqs = [s["sequence-number"] for s in meta["snapshots"]]
-    assert seqs == sorted(seqs) and len(set(seqs)) == len(seqs)
-    assert meta["last-sequence-number"] == seqs[-1]
-
-    for snap in meta["snapshots"]:
-        assert snap["summary"]["operation"] in (
-            "append", "overwrite", "replace", "delete"
-        )
-        mlist = _read_avro_rows(snap["manifest-list"], _MANIFEST_FILE_STRUCT)
-        assert mlist, "manifest list empty"
-        total_rows = 0
-        for m in mlist:
-            (m_path, m_len, spec_id, content, seq, min_seq, added_sid,
-             n_added, n_exist, n_del, r_added, r_exist, r_del) = m
-            assert os.path.getsize(m_path) == m_len
-            assert spec_id == 0 and content == 0
-            assert seq == snap["sequence-number"]
-            entries = _read_avro_rows(m_path, _MANIFEST_ENTRY_STRUCT)
-            assert len([e for e in entries if e[0] == 1]) == n_added
-            total_rows += sum(e[4][4] for e in entries if e[0] in (0, 1))
-            for e in entries:
-                df_struct = e[4]
-                assert df_struct[0] == 0  # content: data
-                assert df_struct[2] == "PARQUET"
-                assert os.path.exists(df_struct[1])
-                assert os.path.getsize(df_struct[1]) == df_struct[5]
-        assert total_rows == t.read(version=snap["snapshot-id"]).count()
-
-
-def test_iceberg_schema_evolution_field_ids(spark, tmp_path):
-    """Schema evolution: unchanged columns keep their field-ids, new
-    columns get fresh ids above last-column-id, current-schema-id
-    advances, and historical snapshots keep their original schema-id."""
-    import json
-    import os
-
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl_ice3"))
-    t.overwrite(spark.createDataFrame([(1, "a")], "k int, s string"))
-    t.overwrite(
-        spark.createDataFrame([(1, "a", 2.5)], "k int, s string, x double")
-    )
-    md = os.path.join(t.path, "metadata")
-    meta = json.load(
-        open(os.path.join(md, f"v{t._version()}.metadata.json"))
-    )
-    assert len(meta["schemas"]) == 2
-    s0 = next(s for s in meta["schemas"] if s["schema-id"] == 0)
-    s1 = next(s for s in meta["schemas"] if s["schema-id"] == 1)
-    ids0 = {f["name"]: f["id"] for f in s0["fields"]}
-    ids1 = {f["name"]: f["id"] for f in s1["fields"]}
-    assert ids1["k"] == ids0["k"] and ids1["s"] == ids0["s"]
-    assert ids1["x"] > max(ids0.values())
-    assert meta["current-schema-id"] == 1
-    snaps = {s["snapshot-id"]: s for s in meta["snapshots"]}
-    assert snaps[0]["schema-id"] == 0 and snaps[1]["schema-id"] == 1
-
-
-def test_iceberg_crash_gap_catchup(spark, tmp_path):
-    """A commit whose mirror emission was lost (crash between pointer
-    swap and emit, simulated by deleting the newest metadata files)
-    must be re-derived by the next commit's catch-up — afterwards
-    every snapshot, including the gap, reads correctly."""
-    import os
-
-    from ai_fabric_etl_spark.sources.iceberg_mirror import (
-        read_iceberg_snapshot,
-    )
-
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl_ice4"))
-    t.overwrite(spark.range(0, 10).selectExpr("id"))
-    t.overwrite(spark.range(0, 20).selectExpr("id"))
-    md = os.path.join(t.path, "metadata")
-    v = t._version()
-    os.remove(os.path.join(md, f"v{v}.metadata.json"))
-    with open(os.path.join(md, "version-hint.text"), "w") as fh:
-        fh.write(str(v - 1))
-    t.overwrite(spark.range(0, 30).selectExpr("id"))
-    for ver in range(t._version() + 1):
-        got = read_iceberg_snapshot(spark, t.path, snapshot_id=ver).count()
-        assert got == t.read(version=ver).count(), ver
-
-
-def test_iceberg_decimal_precision_edges(spark, tmp_path):
-    """Decimal corners (VERDICT r7 item 5): max precision 38, scale 0
-    and scale == precision, negative/zero/boundary values — the mirror
-    must declare `decimal(p, s)` exactly and the from-scratch reader
-    must reproduce the table byte-for-byte through the metadata chain."""
-    from decimal import Decimal
-
-    from ai_fabric_etl_spark.sources.iceberg_mirror import (
-        read_iceberg_snapshot,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, Decimal("9" * 20 + "." + "9" * 18),
-             Decimal("1"), Decimal("0." + "0" * 5 + "1")),
-            (2, Decimal("-" + "9" * 20 + "." + "9" * 18),
-             Decimal("-9"), Decimal("-0.999999")),
-            (3, Decimal("0"), Decimal("0"), Decimal("0")),
-            (4, None, None, None),
-        ],
-        "k int, big decimal(38,18), tiny decimal(1,0), frac decimal(6,6)",
-    )
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl_dec"))
-    t.overwrite(df)
-    import json
-    import os
-
-    md = os.path.join(t.path, "metadata")
-    meta = json.load(open(os.path.join(md, "v0.metadata.json")))
-    types = {
-        f["name"]: f["type"]
-        for f in meta["schemas"][0]["fields"]
-    }
-    assert types["big"] == "decimal(38, 18)"
-    assert types["tiny"] == "decimal(1, 0)"
-    assert types["frac"] == "decimal(6, 6)"
-    back = read_iceberg_snapshot(spark, t.path)
-    assert back.schema == df.schema
-    assert sorted(back.collect()) == sorted(df.collect())
-
-
-def test_iceberg_nested_struct_evolution_keeps_ids(spark, tmp_path):
-    """Adding a sub-field to a nested struct must keep the parent
-    field-id AND the sibling sub-field ids (spec: adding a nested
-    field is an in-place evolution, not a drop+re-add); an int->long
-    promotion keeps its id; a string->int change is a NEW column id."""
-    import json
-    import os
-
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl_nested"))
-    t.overwrite(
-        spark.createDataFrame(
-            [(1, (10, "x"), "keep")],
-            "k int, s struct<a:int, b:string>, c string",
-        )
-    )
-    t.overwrite(
-        spark.createDataFrame(
-            [(1, (10, "x", 2.5), 7)],
-            "k long, s struct<a:int, b:string, extra:double>, c int",
-        )
-    )
-    md = os.path.join(t.path, "metadata")
-    meta = json.load(
-        open(os.path.join(md, f"v{t._version()}.metadata.json"))
-    )
-    s0 = next(s for s in meta["schemas"] if s["schema-id"] == 0)
-    s1 = next(s for s in meta["schemas"] if s["schema-id"] == 1)
-
-    def by_name(s):
-        return {f["name"]: f for f in s["fields"]}
-
-    f0, f1 = by_name(s0), by_name(s1)
-    # int->long promotion keeps the id
-    assert f1["k"]["id"] == f0["k"]["id"] and f1["k"]["type"] == "long"
-    # nested struct: parent id kept, sibling sub-ids kept, new sub-field fresh
-    assert f1["s"]["id"] == f0["s"]["id"]
-    sub0 = {f["name"]: f["id"] for f in f0["s"]["type"]["fields"]}
-    sub1 = {f["name"]: f["id"] for f in f1["s"]["type"]["fields"]}
-    assert sub1["a"] == sub0["a"] and sub1["b"] == sub0["b"]
-    all_old = {f0["k"]["id"], f0["s"]["id"], f0["c"]["id"], *sub0.values()}
-    assert sub1["extra"] not in all_old
-    # string->int is NOT a legal promotion: new column id
-    assert f1["c"]["id"] not in all_old
-    # field-id uniqueness across the evolved schema
-    ids = [f1["k"]["id"], f1["s"]["id"], f1["c"]["id"], *sub1.values()]
-    assert len(ids) == len(set(ids))
-
-
-def test_iceberg_expire_snapshots(spark, tmp_path):
-    """expire_iceberg_snapshots: retained snapshots still read with
-    full parity, expired ids raise, orphaned manifest lists/manifests
-    are deleted, and the NEXT commit after expiry emits normally."""
-    import os
-
-    from ai_fabric_etl_spark.sources.iceberg_mirror import (
-        expire_iceberg_snapshots,
-        read_iceberg_snapshot,
-    )
-
-    t = ParquetMergeTable(spark, str(tmp_path / "tbl_exp"))
-    for n in (10, 20, 30, 40):
-        t.overwrite(spark.range(0, n).selectExpr("id"))
-    md = os.path.join(t.path, "metadata")
-    n_lists_before = len(
-        [n for n in os.listdir(md) if n.startswith("snap-")]
-    )
-    assert n_lists_before == 4
-
-    stats = expire_iceberg_snapshots(t.path, keep_last=2)
-    assert stats["expired"] == 2 and stats["retained"] == 2
-    assert stats["deleted_manifest_lists"] == 2
-    assert len([n for n in os.listdir(md) if n.startswith("snap-")]) == 2
-    # retained snapshots: full parity through the metadata chain
-    assert read_iceberg_snapshot(spark, t.path).count() == 40
-    assert read_iceberg_snapshot(spark, t.path, snapshot_id=2).count() == 30
-    # expired snapshot raises
-    import pytest as _pt
-    with _pt.raises(ValueError, match="not in metadata"):
-        read_iceberg_snapshot(spark, t.path, snapshot_id=0)
-    # idempotent when nothing to expire
-    assert expire_iceberg_snapshots(t.path, keep_last=2)["expired"] == 0
-    # next commit emits normally and reads
-    t.overwrite(spark.range(0, 50).selectExpr("id"))
-    assert read_iceberg_snapshot(spark, t.path).count() == 50
-    assert read_iceberg_snapshot(spark, t.path, snapshot_id=3).count() == 40

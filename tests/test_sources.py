@@ -102,6 +102,7 @@ def test_x12_datasource_parity_with_pipeline(spark, tmp_path):
 
 def test_x12_datasource_dead_letter_and_missing(spark, tmp_path):
     from ai_fabric_etl_spark.sources.x12_datasource import register
+    from ai_fabric_etl_spark.x12.parsers import dead_letter_row
 
     import pytest
     from py4j.protocol import Py4JJavaError
@@ -113,6 +114,17 @@ def test_x12_datasource_dead_letter_and_missing(spark, tmp_path):
     rows = spark.read.format("x12").load(str(d)).collect()
     assert len(rows) == 1 and rows[0]["transaction_type"] == "ERR"
     assert rows[0]["is_valid"] is False
+    # the row is the shared dead letter for the read's decode error
+    with pytest.raises(UnicodeDecodeError) as failure:
+        with open(d / "broken.x12", encoding="utf-8") as fh:
+            fh.read()
+    want = dead_letter_row(
+        "broken.x12", failure.value, "x12-datasource", datetime.datetime.now()
+    )
+    run_cols = ("batch_id", "processing_timestamp", "processing_date")
+    assert {k: v for k, v in rows[0].asDict().items() if k not in run_cols} == {
+        k: v for k, v in want.items() if k not in run_cols
+    }
     empty = tmp_path / "empty"
     empty.mkdir()
     with pytest.raises((Py4JJavaError, Exception)):

@@ -1,26 +1,21 @@
 """Sketch-state longevity: 1,000 epoch-guarded commits with periodic
-compaction must leave every replay path O(1)/bounded — the pointer,
-the Delta log (checkpoint-seeded), and the Iceberg mirror (snapshot
-expiry) — and the fold must still work, exactly-once, at epoch 1000+
-(VERDICT r7 item 6: the mirror had this discipline, the state tables
-didn't have the PROOF).
+compaction must leave the retained versions bounded and the pointer
+replay O(1), and the fold must still work, exactly-once, at epoch
+1000+ (VERDICT r7 item 6).
 
-The loop drives the real metadata machinery 1,000 times: pointer swap
-(_swap), Delta JSON commit + every-10th parquet checkpoint
-(_emit_delta_log), Iceberg metadata/manifests (_emit_iceberg), the
-epoch guard, and compact_state every 100 epochs. The one thing NOT
-re-run per epoch is the Spark parquet job that materializes the
-version directory — each epoch instead copies a byte-identical
-Spark-written v=0 artifact (shutil.copytree, same files a write
-produces). That job is vanilla Spark write latency (~0.75 s each,
-~12 min for 1,000) and has no bearing on the growth properties under
-test; real folds through merge_drift_state bracket the loop at both
-ends to prove the genuine path.
+The loop drives the real commit machinery 1,000 times: manifest write,
+pointer swap (_swap), the epoch guard, and compact_state every 100
+epochs. The one thing NOT re-run per epoch is the Spark parquet job
+that materializes the version directory — each epoch instead copies a
+byte-identical Spark-written v=0 artifact (shutil.copytree, same files
+a write produces). That job is vanilla Spark write latency (~0.75 s
+each, ~12 min for 1,000) and has no bearing on the growth properties
+under test; real folds through merge_drift_state bracket the loop at
+both ends to prove the genuine path.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -49,11 +44,10 @@ def test_state_table_1000_epochs_bounded_replay(spark, tmp_path):
     t = ParquetMergeTable(spark, state)
     assert t.last_epoch(app) == 0
 
-    # epochs 1..1000: the full metadata machinery per epoch, with the
+    # epochs 1..1000: the full commit machinery per epoch, with the
     # version directory materialized as a byte-identical copy of the
     # Spark-written v=0 artifact (see module docstring)
-    sch = t.read().schema
-    schema_json = sch.json()
+    schema_json = t.read().schema.json()
     for e in range(1, EPOCHS + 1):
         v = t._version() + 1
         # source survives compaction: always the current newest version
@@ -65,8 +59,6 @@ def test_state_table_1000_epochs_bounded_replay(spark, tmp_path):
         os.remove(os.path.join(state, f"v={v}", "_manifest.json"))
         t._write_manifest(v, t._scan_version_dir(v), schema_json)
         t._swap(v, e, op="WRITE", app_id=app)
-        t._emit_delta_log(v, schema_json, "WRITE")
-        t._emit_iceberg(v, sch, "WRITE")
         if e % COMPACT_EVERY == 0:
             stats = compact_state(spark, state, keep_last=KEEP_LAST)
             assert stats["retained"] == KEEP_LAST
@@ -80,36 +72,7 @@ def test_state_table_1000_epochs_bounded_replay(spark, tmp_path):
     vdirs = [n for n in os.listdir(state) if n.startswith("v=")]
     assert len(vdirs) <= KEEP_LAST, vdirs
 
-    # (2) Iceberg mirror: metadata.json carries <= compact-interval
-    # snapshots and stays small; manifests/lists match the retained set
-    md = os.path.join(state, "metadata")
-    hint = int(open(os.path.join(md, "version-hint.text")).read())
-    meta_path = os.path.join(md, f"v{hint}.metadata.json")
-    meta = json.load(open(meta_path))
-    assert len(meta["snapshots"]) == KEEP_LAST
-    assert os.path.getsize(meta_path) < 64 * 1024
-    snap_files = [n for n in os.listdir(md) if n.startswith("snap-")]
-    manifest_files = [n for n in os.listdir(md) if n.startswith("manifest-")]
-    assert len(snap_files) == KEEP_LAST, len(snap_files)
-    assert len(manifest_files) == KEEP_LAST, len(manifest_files)
-
-    # (3) Delta log: replay seeds from the newest checkpoint and reads
-    # at most one checkpoint interval of JSON tail
-    log_dir = os.path.join(state, "_delta_log")
-    last_ck = json.load(open(os.path.join(log_dir, "_last_checkpoint")))
-    tail = [
-        n for n in os.listdir(log_dir)
-        if n.endswith(".json") and int(n.split(".")[0]) > last_ck["version"]
-    ]
-    assert len(tail) <= ParquetMergeTable._CHECKPOINT_INTERVAL, len(tail)
-
-    # the from-scratch Delta reader resolves the current snapshot
-    # through that bounded chain
-    from ai_fabric_etl_spark.sources.delta_reader import read_delta_snapshot
-
-    assert read_delta_snapshot(spark, state).count() == 1
-
-    # (4) the REAL fold still works at epoch 1000+, and the
+    # (2) the REAL fold still works at epoch 1000+, and the
     # exactly-once guard still skips replays
     merge_drift_state(spark, batch, state, EPOCHS + 1, "x", edges, app_id=app)
     merge_drift_state(spark, batch, state, 500, "x", edges, app_id=app)  # replay

@@ -14,6 +14,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from ai_fabric_etl_spark.operators.merge import ParquetMergeTable
 from ai_fabric_etl_spark.pipeline.silver import parse_to_silver
 from ai_fabric_etl_spark.queries.catalog import load_events
 from ai_fabric_etl_spark.streaming import (
@@ -477,6 +478,40 @@ def test_start_gold_incremental_stream(spark, landing, tmp_path):
     )
     assert claims.count() > 0
     assert total > 0 and files.count() > 0
+
+
+def test_gold_incremental_state_tables_hold_only_own_files(spark, tmp_path):
+    """After two drops through stream_bronze -> parse_to_silver ->
+    start_gold_incremental, every state table holds only its own
+    commit artifacts: the pointer, format marker, commit log and
+    version directories — no Delta log, no Iceberg metadata."""
+    from ai_fabric_etl_spark.streaming.gold_stream import start_gold_incremental
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    state = tmp_path / "state"
+    ckpt = str(tmp_path / "ckpt")
+    for drop, seed in enumerate((21, 22)):
+        for name, content in generate_corpus(n_files=3, seed=seed):
+            (landing / f"d{drop}_{name}").write_text(content)
+        stream = parse_to_silver(stream_bronze(spark, str(landing)), now=NOW)
+        start_gold_incremental(stream, str(state), ckpt).awaitTermination(180)
+
+    tables = 0
+    for root, dirs, files in os.walk(state):
+        assert "_delta_log" not in dirs and "metadata" not in dirs, root
+        if "_LATEST" not in files:
+            continue
+        tables += 1
+        extra = {
+            n for n in os.listdir(root)
+            if n not in ("_LATEST", "_FORMAT", "_history.jsonl")
+            and not (n.startswith("v=") and os.path.isdir(os.path.join(root, n)))
+        }
+        assert not extra, (root, extra)
+        # both drops were folded
+        assert ParquetMergeTable(spark, root).last_epoch(ckpt) == 1, root
+    assert tables >= 7
 
 
 def test_gold_incremental_quality_and_kpis(spark, tmp_path):

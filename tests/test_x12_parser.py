@@ -5,11 +5,25 @@ from __future__ import annotations
 from datetime import datetime
 
 from ai_fabric_etl_spark.x12.envelope import extract_envelope_metadata, validate_x12_text
-from ai_fabric_etl_spark.x12.parsers import parse_x12_file
+from ai_fabric_etl_spark.x12.parsers import dead_letter_row, parse_x12_file
 from ai_fabric_etl_spark.x12.segments import split_segments
 from ai_fabric_etl_spark.x12.testgen import generate_corpus
 
 NOW = datetime(2025, 1, 2, 12, 0, 0)
+_RUN_COLS = ("batch_id", "processing_timestamp", "processing_date")
+
+
+def _without_run_cols(row: dict) -> dict:
+    return {k: v for k, v in row.items() if k not in _RUN_COLS}
+
+
+def _parse_error(file_name: str, content):
+    """The exception parse_x12_file raises for ``content``."""
+    try:
+        parse_x12_file(file_name, content, now=NOW)
+    except Exception as exc:  # noqa: BLE001
+        return exc
+    raise AssertionError(f"{file_name}: expected the parse to raise")
 
 
 def _sample(txn_type: str) -> tuple[str, str]:
@@ -175,7 +189,12 @@ def test_sql_udtf_corrupt_input_yields_no_rows(spark):
         "('empty.x12', ''), ('null.x12', CAST(NULL AS STRING)) AS f(file_name, content), "
         "LATERAL parse_x12(f.file_name, f.content) AS p"
     ).collect()
-    assert rows == []
+    # junk and empty content parse to zero sets; NULL content raises
+    # and dead-letters exactly as parse_to_silver does
+    want = dead_letter_row("null.x12", _parse_error("null.x12", None), "sql", NOW)
+    assert [_without_run_cols(r.asDict()) for r in rows] == [
+        _without_run_cols(want)
+    ]
 
 
 def test_quality_formula_canonical():
@@ -237,6 +256,8 @@ def test_parse_failure_yields_dead_letter_row(spark):
     assert len(err) == 1
     assert err[0]["file_name"] == "broken.x12"
     assert err[0]["is_valid"] is False and err[0]["quality_score"] == 0
+    want = dead_letter_row("broken.x12", _parse_error("broken.x12", None), "dlq", NOW)
+    assert _without_run_cols(err[0].asDict()) == _without_run_cols(want)
     assert len(rows) > len(err)  # the good files still parsed
 
 
@@ -260,7 +281,7 @@ def test_parse_edge_inputs_never_crash():
     the guarantee mapInPandas batches rely on."""
     import datetime
 
-    from ai_fabric_etl_spark.x12.parsers import parse_x12_file
+    from ai_fabric_etl_spark.x12.parsers import dead_letter_row, parse_x12_file
 
     now = datetime.datetime(2024, 1, 1)
     cases = {
