@@ -14,6 +14,8 @@ codegen end to end.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -368,13 +370,21 @@ ALL_MARTS = {
 
 
 def build_all_marts(silver_with_parsed_df: DataFrame, **w) -> dict[str, DataFrame]:
-    """Build every mart from one cached silver scan.
+    """Build every mart's plan over one silver frame.
 
     The reference re-reads silver 9+ times (eleven .count() actions,
-    SURVEY §3.1 step 4); caching once removes the rescans.
-    """
-    silver_with_parsed_df.cache()
+    SURVEY §3.1 step 4). Here the caller owns caching: persist the
+    frame before writing the marts so they share one scan, and
+    unpersist it after ``write_marts`` returns (``run._cmd_run``
+    persists the parsed silver once for silver, gold and acks)."""
     return {name: fn(silver_with_parsed_df, **w) for name, fn in ALL_MARTS.items()}
+
+
+def _write_mart(df: DataFrame, path: str) -> None:
+    writer = df.write.mode("overwrite")
+    if "processing_date" in df.columns:
+        writer = writer.partitionBy("processing_date")
+    writer.parquet(path)
 
 
 def write_marts(marts: dict[str, DataFrame], out_dir: str) -> None:
@@ -383,9 +393,15 @@ def write_marts(marts: dict[str, DataFrame], out_dir: str) -> None:
     partitionBy("processing_date")). Marts without a processing_date
     column (global KPIs) are written unpartitioned. At scale, set
     ``spark.sql.sources.partitionOverwriteMode=dynamic`` so a lookback
-    recompute replaces only the touched date partitions."""
-    for name, df in marts.items():
-        writer = df.write.mode("overwrite")
-        if "processing_date" in df.columns:
-            writer = writer.partitionBy("processing_date")
-        writer.parquet(f"{out_dir}/{name}")
+    recompute replaces only the touched date partitions.
+
+    The marts are independent, so every write is submitted at once on
+    one thread per mart and Spark schedules their jobs side by side.
+    The first failure re-raises after every write has finished."""
+    with ThreadPoolExecutor(max_workers=max(1, len(marts))) as pool:
+        jobs = [
+            pool.submit(_write_mart, df, f"{out_dir}/{name}")
+            for name, df in marts.items()
+        ]
+    for job in jobs:
+        job.result()

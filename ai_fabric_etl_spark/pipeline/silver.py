@@ -14,7 +14,7 @@ from datetime import datetime
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_fabric_etl_spark.schemas import PARSED_SCHEMA, SILVER_SCHEMA
@@ -87,4 +87,15 @@ def write_silver(silver_df: DataFrame, out_dir: str) -> None:
         silver_df.write.mode("append")
         .partitionBy("processing_date", "transaction_type")
         .parquet(out_dir)
+    )
+
+
+def read_silver(spark: SparkSession, path: str) -> DataFrame:
+    """Read a written silver table back with the silver schema's types.
+
+    Partition discovery infers the all-digit ``transaction_type``
+    values (``837``, ``835`` ...) as INT; cast back to STRING so marts
+    and 997 functional codes match a freshly parsed frame."""
+    return spark.read.parquet(path).withColumn(
+        "transaction_type", F.col("transaction_type").cast("string")
     )

@@ -14,6 +14,24 @@ bronze.py -> silver.py -> gold.py, x12/ack997.py); ``--stage all``
 997 acknowledgment files under ``OUT/{bronze,silver,gold,acks}``.
 The monitoring views (pipeline/views.py) are session-scoped SQL and
 therefore not materialized here.
+
+Execution shape of ``run``: every plan runs once, and sinks that do
+not depend on each other run at the same time on one session.
+
+- The landing scan feeds two sinks at once: the bronze write and the
+  silver parse + write run side by side on a thread pool.
+- Silver is parsed once. The parsed frame is persisted (memory, spilling
+  to disk) before its write, and the gold marts and the 997s read that
+  cache. Their plans are built while silver is being written; once it
+  is written, the mart writes (``write_marts`` submits all 11 together)
+  and the 997 write run side by side.
+- The printed counts come from ``DataFrame.observe`` on the bronze,
+  silver and 997 writes, so no extra action re-scans the input.
+- Lines print in stage order. The first failing sink re-raises after
+  the others have finished, and everything persisted is released.
+
+A standalone ``--stage gold`` or ``--stage acks`` reads silver back
+through ``read_silver``, which restores its STRING transaction type.
 """
 
 from __future__ import annotations
@@ -21,6 +39,17 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from concurrent.futures import ThreadPoolExecutor
+
+
+def _observed(df, name: str):
+    """``df`` with a row count observed by its next action, and the
+    ``Observation`` to read it from once that action has run."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation(name)
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def _cmd_run(args) -> int:
@@ -30,6 +59,7 @@ def _cmd_run(args) -> int:
     from ai_fabric_etl_spark.pipeline.gold import build_all_marts, write_marts
     from ai_fabric_etl_spark.pipeline.silver import (
         parse_to_silver,
+        read_silver,
         silver_with_parsed,
         write_silver,
     )
@@ -44,34 +74,53 @@ def _cmd_run(args) -> int:
         else [args.stage]
     )
 
-    bronze = None
-    if "bronze" in stages or "silver" in stages:
-        bronze = read_bronze(spark, args.input, glob=args.glob)
-    if "bronze" in stages:
-        write_bronze(bronze, f"{out}/bronze")
-        print(f"bronze: {bronze.count()} files -> {out}/bronze")
-
     silver = None
-    if "silver" in stages:
-        valid = bronze.filter(F.col("is_valid_x12"))
-        silver = parse_to_silver(valid, batch_id=args.batch_id)
-        write_silver(silver, f"{out}/silver")
-        print(f"silver: {silver.count()} transactions -> {out}/silver")
+    try:
+        with ThreadPoolExecutor(max_workers=len(stages)) as pool:
+            if "bronze" in stages or "silver" in stages:
+                bronze = read_bronze(spark, args.input, glob=args.glob)
+            if "bronze" in stages:
+                bronze_rows, bronze_obs = _observed(bronze, "bronze")
+                bronze_job = pool.submit(write_bronze, bronze_rows, f"{out}/bronze")
 
-    if "gold" in stages or "acks" in stages:
-        if silver is None:  # standalone gold/acks stage reads silver back
-            silver = spark.read.parquet(f"{out}/silver")
-        enriched = silver_with_parsed(silver)
+            if "silver" in stages:
+                valid = bronze.filter(F.col("is_valid_x12"))
+                silver = parse_to_silver(valid, batch_id=args.batch_id)
+            elif "gold" in stages or "acks" in stages:
+                silver = read_silver(spark, f"{out}/silver")
+            if "gold" in stages or "acks" in stages:
+                silver.persist()  # one parse / scan for every consumer
+            if "silver" in stages:
+                silver_rows, silver_obs = _observed(silver, "silver")
+                silver_job = pool.submit(write_silver, silver_rows, f"{out}/silver")
 
-    if "gold" in stages:
-        marts = build_all_marts(enriched)
-        write_marts(marts, f"{out}/gold")
-        print(f"gold: {len(marts)} marts -> {out}/gold")
+            # plan the downstream sinks while silver is written; their
+            # writes start once the cache behind them is filled
+            if "gold" in stages:
+                marts = build_all_marts(silver_with_parsed(silver))
+            if "acks" in stages:
+                acks, acks_obs = _observed(generate_acks(silver), "acks")
+            if "silver" in stages:
+                silver_job.result()
+            if "gold" in stages:
+                gold_job = pool.submit(write_marts, marts, f"{out}/gold")
+            if "acks" in stages:
+                acks_job = pool.submit(write_ack_files, acks, f"{out}/acks")
 
-    if "acks" in stages:
-        acks = generate_acks(silver)
-        write_ack_files(acks, f"{out}/acks")
-        print(f"acks: {acks.count()} 997s -> {out}/acks")
+            if "bronze" in stages:
+                bronze_job.result()
+                print(f"bronze: {bronze_obs.get['rows']} files -> {out}/bronze")
+            if "silver" in stages:
+                print(f"silver: {silver_obs.get['rows']} transactions -> {out}/silver")
+            if "gold" in stages:
+                gold_job.result()
+                print(f"gold: {len(marts)} marts -> {out}/gold")
+            if "acks" in stages:
+                acks_job.result()
+                print(f"acks: {acks_obs.get['rows']} 997s -> {out}/acks")
+    finally:
+        if silver is not None:
+            silver.unpersist()
     return 0
 
 

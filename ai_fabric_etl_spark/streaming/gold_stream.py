@@ -33,7 +33,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ai_fabric_etl_spark.operators.merge import ParquetMergeTable
 from ai_fabric_etl_spark.pipeline.gold import build_all_marts, write_marts
-from ai_fabric_etl_spark.pipeline.silver import silver_with_parsed
+from ai_fabric_etl_spark.pipeline.silver import read_silver, silver_with_parsed
 
 _KEYS = ["processing_date", "transaction_type", "sender_id", "receiver_id"]
 
@@ -63,21 +63,19 @@ def start_gold_lookback_refresh(
             .partitionBy("processing_date", "transaction_type")
             .parquet(f"{silver_dir}/epoch={epoch_id}")
         )
-        raw = spark.read.parquet(silver_dir).drop("epoch")
-        # partition-column type inference would read the all-numeric
-        # transaction_type partition values back as INT, drifting the
-        # streamed marts' schema from the batch pipeline's STRING —
-        # restore the silver schema's type explicitly
-        raw = raw.withColumn(
-            "transaction_type", F.col("transaction_type").cast("string")
-        )
-        silver = silver_with_parsed(raw)
+        silver = silver_with_parsed(read_silver(spark, silver_dir).drop("epoch"))
         if lookback_days is not None:
             horizon = silver.agg(
                 F.date_sub(F.max("processing_date"), lookback_days).alias("h")
             ).collect()[0]["h"]
             silver = silver.filter(F.col("processing_date") >= F.lit(horizon))
-        write_marts(build_all_marts(silver), gold_dir)
+        # one scan shared by the 11 concurrent mart writes, released
+        # before the next epoch
+        silver.persist()
+        try:
+            write_marts(build_all_marts(silver), gold_dir)
+        finally:
+            silver.unpersist()
 
     writer = (
         silver_stream.writeStream.foreachBatch(refresh)

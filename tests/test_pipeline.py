@@ -269,3 +269,90 @@ def test_cli_query_listing(capsys):
     assert main(["queries"]) == 0
     out = capsys.readouterr().out
     assert "x12_silver_transactions" in out and "oracled" in out
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def _ack_lines(spark, acks_dir: str) -> list[str]:
+    return sorted(r[0] for r in spark.read.text(acks_dir).select("value").collect())
+
+
+def test_cli_printed_counts_match_outputs(spark, landing_dir, tmp_path, capsys):
+    """The bronze/silver/acks counts the CLI prints (taken from
+    observed metrics on the writes) equal what the writes left on disk."""
+    import re
+
+    from ai_fabric_etl_spark.pipeline.silver import read_silver
+    from ai_fabric_etl_spark.run import main
+
+    out = str(tmp_path / "wh")
+    assert main(["run", "--input", landing_dir, "--out", out]) == 0
+    printed = capsys.readouterr().out
+    lines = [ln.split(":")[0] for ln in printed.splitlines()]
+    assert lines == ["bronze", "silver", "gold", "acks"], printed
+
+    def count(pattern: str) -> int:
+        return int(re.search(pattern, printed).group(1))
+
+    assert count(r"bronze: (\d+) files") == spark.read.parquet(f"{out}/bronze").count()
+    assert count(r"silver: (\d+) transactions") == read_silver(spark, f"{out}/silver").count()
+    assert count(r"acks: (\d+) 997s") == len(_ack_lines(spark, f"{out}/acks"))
+
+
+def test_cli_run_releases_persisted_frames(spark, landing_dir, tmp_path):
+    """A CLI run unpersists everything it persisted: running it inside a
+    long-lived session leaves no cached RDD behind."""
+    from ai_fabric_etl_spark.run import main
+
+    before = _persistent_rdds(spark)
+    assert main(["run", "--input", landing_dir, "--out", str(tmp_path / "wh")]) == 0
+    assert _persistent_rdds(spark) == before
+
+
+def test_cli_standalone_gold_and_acks_read_silver_as_string(spark, landing_dir, tmp_path):
+    """``--stage gold`` / ``--stage acks`` over a written silver give the
+    full run's types and text: partition discovery must not turn the
+    all-digit transaction_type into INT (wrong mart schema, and every
+    997's AK1 code falls back to FA)."""
+    from ai_fabric_etl_spark.run import main
+
+    out = str(tmp_path / "wh")
+    assert main(["run", "--input", landing_dir, "--out", out]) == 0
+    full_acks = _ack_lines(spark, f"{out}/acks")
+    assert all("AK1*FA*" not in a for a in full_acks)
+
+    for stage in ("gold", "acks"):
+        assert main(["run", "--stage", stage, "--input", landing_dir, "--out", out]) == 0
+    for mart in ("gold_transaction_summary", "gold_data_quality_metrics"):
+        dtypes = dict(spark.read.parquet(f"{out}/gold/{mart}").dtypes)
+        assert dtypes["transaction_type"] == "string", mart
+    assert _ack_lines(spark, f"{out}/acks") == full_acks
+
+
+def test_cli_failing_sink_fails_the_run(spark, landing_dir, tmp_path):
+    """A sink that cannot write fails the whole run, without hanging on
+    the sinks still running beside it and without leaking the cache."""
+    import threading
+
+    from ai_fabric_etl_spark.run import main
+
+    out = tmp_path / "wh"
+    out.mkdir()
+    (out / "gold").write_text("a file where the gold directory should be")
+    before = _persistent_rdds(spark)
+    result = {}
+
+    def run():
+        try:
+            result["rc"] = main(["run", "--input", landing_dir, "--out", str(out)])
+        except Exception as exc:  # noqa: BLE001 - the failure is the expected outcome
+            result["error"] = exc
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(600)
+    assert not t.is_alive(), "run hung after a sink failed"
+    assert "error" in result or result["rc"] != 0
+    assert _persistent_rdds(spark) == before

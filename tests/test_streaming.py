@@ -214,9 +214,12 @@ def test_gold_lookback_refresh_stream(spark, landing, tmp_path):
     silver_dir = str(tmp_path / "silver")
     gold_dir = str(tmp_path / "gold")
     ckpt = str(tmp_path / "ckpt")
+    cached_before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     stream = parse_to_silver(stream_bronze(spark, landing), now=NOW)
     q = start_gold_lookback_refresh(stream, silver_dir, gold_dir, ckpt)
     q.awaitTermination(180)
+    # each refresh releases the silver scan it cached for its marts
+    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == cached_before
 
     # restore the silver schema's STRING transaction_type — partition
     # type inference reads the all-numeric values back as int, and the
