@@ -309,7 +309,14 @@ class ParquetMergeTable:
         immutable directories, so any un-vacuumed version stays
         readable. ``timestamp`` (unix seconds) resolves to the newest
         version committed at or before that instant, per the commit
-        log."""
+        log.
+
+        In manifest mode the read is lazy: the manifest names the files
+        and records the write-time schema, which is handed to
+        ``spark.read.schema(...)``, so no job runs to infer a schema
+        from the parquet footers. The file source reads every column as
+        nullable. A zero-file version reads as an empty frame with that
+        schema; a legacy-layout table infers it from its directory."""
         if timestamp is not None:
             if version is not None:
                 raise ValueError("pass version OR timestamp, not both")
@@ -332,21 +339,25 @@ class ParquetMergeTable:
                     f"version {v} not retained at {self.path} (vacuumed?)"
                 )
             files = [os.path.join(self.path, e["path"]) for e in entries["files"]]
-            if files:
-                return self.spark.read.parquet(*files)
+            schema = None
             if entries.get("schema"):
+                import json as _json
+
+                from pyspark.sql.types import StructType as _StructType
+
+                schema = _StructType.fromJson(_json.loads(entries["schema"]))
+            if files:
+                reader = self.spark.read
+                if schema is not None:
+                    reader = reader.schema(schema)
+                return reader.parquet(*files)
+            if schema is not None:
                 # zero-file version: the manifest records the write-
                 # time schema, so an empty frame with THAT schema is
                 # the correct read (ADVICE r13 — a directory read here
                 # hit 'Unable to infer schema' on a dir holding only
                 # _manifest.json/_SUCCESS)
-                import json as _json
-
-                from pyspark.sql.types import StructType as _StructType
-
-                return self.spark.createDataFrame(
-                    [], _StructType.fromJson(_json.loads(entries["schema"]))
-                )
+                return self.spark.createDataFrame([], schema)
             # defensive: pre-schema manifest — fall through to dir read
         if version is not None and not os.path.isdir(d):
             raise FileNotFoundError(

@@ -23,9 +23,22 @@ engine should do:
   ``hll_sketch_estimate`` at read). Sketches are fixed-size
   (~2^lgConfigK registers) so state stays O(|keys|) at 100 TB while
   estimates hold ~2% relative error.
+
+- ``start_gold_incremental`` — all 11 marts from one stream. Each
+  micro-batch is materialized once (the batch and its parsed payload
+  are cached), then its 11 state commits run concurrently, one thread
+  per distinct table: six aggregate folds (overwrite, then vacuum to
+  two versions) and five detail-mart appends (epoch guard plus a
+  null-safe anti-join on the transaction keys, ``append(retain=2)``).
+  The pool drains before the first error re-raises, so every table
+  that could commit the batch has, and a restart from the checkpoint
+  replays only the tables that missed it.
 """
 
 from __future__ import annotations
+
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -119,7 +132,8 @@ def _fold(
     app_id: str | None = None,
 ) -> None:
     """union(prev, batch) → re-aggregate with the partials' merge
-    functions → atomic swap. One shuffle over O(batch + |keys|) rows.
+    functions → atomic swap → vacuum to the last two versions. One
+    shuffle over O(batch + |keys|) rows.
 
     Exactly-once: foreachBatch is at-least-once, and these folds are
     ADDITIVE, so a replayed batch would double-count. The last applied
@@ -129,21 +143,41 @@ def _fold(
     checkpoint's restarted counter is not mistaken for replays
     (ADVICE r1 + r4 self-review)."""
     table = ParquetMergeTable(spark, state_path)
-    if epoch_id is not None:
-        # app_id (the checkpoint identity) scopes the epoch counter:
-        # a restart on a FRESH checkpoint resets epoch ids to 0, and
-        # without the scoping every real batch up to the old maximum
-        # would be silently skipped as a "replay" (Delta txnAppId)
-        last = table.last_epoch(app_id)
-        if last is not None and epoch_id <= last:
-            return  # replayed batch: already folded into this state
-    if not table.exists():
-        table.overwrite(batch_partials, epoch=epoch_id, app_id=app_id)
+    if _already_applied(table, epoch_id, app_id):
         return
-    merged = (
-        table.read().unionByName(batch_partials).groupBy(*keys).agg(*merge_exprs)
-    )
-    table.overwrite(merged, epoch=epoch_id, app_id=app_id)
+    if table.exists():
+        batch_partials = (
+            table.read().unionByName(batch_partials).groupBy(*keys).agg(*merge_exprs)
+        )
+    table.overwrite(batch_partials, epoch=epoch_id, app_id=app_id)
+    # the current version and the one before it are all a replay or a
+    # reader mid-commit needs; without this every drop leaves a v=N/
+    table.vacuum(keep_last=2)
+
+
+def _commit_concurrently(commits: list) -> None:
+    """Run every zero-argument commit on its own thread of one pool,
+    then re-raise the first error (in list order) once all have
+    finished. Each commit writes a distinct table, so every table
+    keeps a single writer."""
+    with ThreadPoolExecutor(max_workers=len(commits)) as pool:
+        jobs = [pool.submit(commit) for commit in commits]
+    for job in jobs:
+        job.result()
+
+
+def _already_applied(
+    table: ParquetMergeTable, epoch_id: int | None, app_id: str | None
+) -> bool:
+    """True when ``table`` already holds micro-batch ``epoch_id``.
+    app_id (the checkpoint identity) scopes the epoch counter: a
+    restart on a FRESH checkpoint resets epoch ids to 0, and without
+    the scoping every real batch up to the old maximum would be
+    silently skipped as a "replay" (Delta txnAppId)."""
+    if epoch_id is None:
+        return False
+    last = table.last_epoch(app_id)
+    return last is not None and epoch_id <= last
 
 
 _SUMMARY_MERGE = [
@@ -292,12 +326,14 @@ def start_gold_incremental_summary(
 # row per ST..SE set; the service-line/member/claim explodes roll back
 # up to the same transaction before leaving the mart). Every output
 # row therefore derives from exactly one silver row, which makes their
-# incremental form a keyed upsert — no partial-merge algebra at all:
-# transform the batch alone, MERGE on the transaction identity. Safe
-# because a transaction set never spans files and the ingest ships
-# whole files per batch, so a batch always holds every exploded child
-# of the transactions it carries. Replaying a batch (foreachBatch is
-# at-least-once) rewrites identical rows — idempotent.
+# incremental form an append — no partial-merge algebra and no rewrite
+# of held rows: transform the batch alone and append the transactions
+# the table does not hold yet. Safe because a transaction set never
+# spans files and the ingest ships whole files per batch, so a batch
+# always holds every exploded child of the transactions it carries.
+# Replaying a batch (foreachBatch is at-least-once) appends nothing:
+# the epoch guard skips it, and without an epoch a null-safe anti-join
+# on these keys drops every row the table already holds.
 # functional_group_number is part of the identity: ST02 control
 # numbers repeat across GS groups within a file (ADVICE r1).
 _DETAIL_KEYS = [
@@ -324,14 +360,38 @@ def merge_detail_batch(
     epoch_id: int | None = None, app_id: str | None = None,
     parsed_batch: DataFrame | None = None,
 ) -> None:
-    """Upsert one silver batch's rows into every detail mart (the
-    upsert is idempotent under replay; epoch recorded for parity)."""
+    """Append one silver batch's transactions to every detail mart: an
+    epoch-guarded anti-join append, not a keyed upsert, so a commit
+    costs O(batch) data I/O and never rewrites held rows. A table that
+    already records ``epoch_id`` for ``app_id`` is skipped; otherwise
+    rows whose ``_DETAIL_KEYS`` the table already holds are dropped by
+    a null-safe left-anti join, so a replay with or without an epoch
+    appends nothing. Each table keeps its last two versions. The five
+    tables are distinct, so their commits run concurrently; the first
+    error re-raises once every commit has finished."""
     swp = parsed_batch if parsed_batch is not None else silver_with_parsed(silver_batch)
-    for name, fn in _detail_marts().items():
-        mart = fn(swp).dropDuplicates(_DETAIL_KEYS)
-        ParquetMergeTable(spark, f"{state_root}/{name}").merge(
-            mart, _DETAIL_KEYS, epoch=epoch_id, app_id=app_id
+    _commit_concurrently([
+        partial(_append_detail, spark, fn, swp, f"{state_root}/{name}", epoch_id, app_id)
+        for name, fn in _detail_marts().items()
+    ])
+
+
+def _append_detail(
+    spark: SparkSession, mart_fn, swp: DataFrame, path: str,
+    epoch_id: int | None, app_id: str | None,
+) -> None:
+    table = ParquetMergeTable(spark, path)
+    if _already_applied(table, epoch_id, app_id):
+        return
+    mart = mart_fn(swp).dropDuplicates(_DETAIL_KEYS)
+    if table.exists():
+        held = table.read().select(*[F.col(k).alias(f"_held_{k}") for k in _DETAIL_KEYS])
+        mart = mart.join(
+            held,
+            on=[F.col(k).eqNullSafe(F.col(f"_held_{k}")) for k in _DETAIL_KEYS],
+            how="left_anti",
         )
+    table.append(mart, epoch=epoch_id, app_id=app_id, retain=2)
 
 
 def read_incremental_detail(
@@ -606,39 +666,50 @@ def start_gold_incremental(
     """One stream maintaining ALL 11 marts incrementally: partial
     merges for the six aggregate marts (summary, partner, eligibility,
     claim-status, data-quality, global KPIs — additive terms exact,
-    unbounded distincts as HLL sketches) and keyed upserts for the
+    unbounded distincts as HLL sketches) and anti-join appends for the
     five detail marts. Each micro-batch costs O(batch + |touched
-    keys|); nothing ever rescans silver."""
+    keys|); nothing ever rescans silver.
+
+    Per micro-batch the batch is materialized once: it and its parsed
+    payload are cached and shared by every merge. The seven merges (the
+    detail one fans out to its five tables) then commit concurrently;
+    every table is distinct, so each keeps a single writer. The pool
+    drains before the first error re-raises, and the two cached frames
+    are released whether or not the fold succeeds. Each table records
+    its own last epoch, so a restart after a failed fold replays only
+    the tables that missed the batch."""
 
     app_id = checkpoint_dir  # epoch counters scoped to this checkpoint
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_df.cache()
-        # parse the typed payload ONCE per batch; three consumers
-        # (eligibility, claim-status, detail upserts) share it instead
-        # of re-running from_json over the whole batch each
-        swp = silver_with_parsed(batch_df).cache()
-        # each state path records its own last epoch, so a crash between
-        # the seven merges replays only the marts that missed the batch
-        merge_summary_batch(spark, batch_df, f"{state_root}/summary", epoch_id, app_id)
-        merge_partner_batch(spark, batch_df, f"{state_root}/partner", epoch_id, app_id)
-        merge_eligibility_batch(
-            spark, batch_df, f"{state_root}/eligibility", epoch_id, app_id,
-            parsed_batch=swp,
-        )
-        merge_claim_status_batch(
-            spark, batch_df, f"{state_root}/claim_status", epoch_id, app_id,
-            parsed_batch=swp,
-        )
-        merge_quality_batch(spark, batch_df, f"{state_root}/quality", epoch_id, app_id)
-        merge_kpis_batch(spark, batch_df, f"{state_root}/kpis", epoch_id, app_id)
-        merge_detail_batch(
-            spark, batch_df, f"{state_root}/detail", epoch_id, app_id,
-            parsed_batch=swp,
-        )
-        swp.unpersist()
-        batch_df.unpersist()
+        swp = None
+        try:
+            # parse the typed payload ONCE per batch; three consumers
+            # (eligibility, claim-status, detail appends) share it
+            # instead of re-running from_json over the whole batch each
+            swp = silver_with_parsed(batch_df).cache()
+            parsed = {"parsed_batch": swp}
+            # the merges are looked up in the module globals on every
+            # call, so a wrapper swapped into the module takes effect
+            calls = [
+                (merge_summary_batch, "summary", {}),
+                (merge_partner_batch, "partner", {}),
+                (merge_eligibility_batch, "eligibility", parsed),
+                (merge_claim_status_batch, "claim_status", parsed),
+                (merge_quality_batch, "quality", {}),
+                (merge_kpis_batch, "kpis", {}),
+                (merge_detail_batch, "detail", parsed),
+            ]
+            _commit_concurrently([
+                partial(fn, spark, batch_df, f"{state_root}/{sub}", epoch_id, app_id, **kw)
+                for fn, sub, kw in calls
+            ])
+        finally:
+            if swp is not None:
+                swp.unpersist()
+            batch_df.unpersist()
 
     writer = (
         silver_stream.writeStream.foreachBatch(fold)

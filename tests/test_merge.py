@@ -446,3 +446,48 @@ def test_schema_changes_and_small_files_report(spark, tmp_path):
     frag.compact(target_files=1)
     rep2 = small_files_report(frag, min_rows=500)
     assert rep2["n_files"] == 1 and rep2["n_small"] == 0
+
+
+def _as_nullable(dt):
+    """``dt`` with every field, element and value nullable: what the
+    parquet file source makes of a schema it is handed."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def test_read_launches_no_job_and_takes_manifest_schema(spark, tmp_path):
+    """A manifest-mode read hands the manifest's schema to the reader,
+    so building the frame runs no schema-inference job."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    t = ParquetMergeTable(spark, str(tmp_path / "tbl_lazy"))
+    ddl = "id long not null, name string, xs array<int>, m map<string,double>"
+    t.overwrite(spark.createDataFrame([(1, "a", [1, None], {"k": 1.5})], ddl))
+    t.append(spark.createDataFrame([(2, None, None, None)], ddl))
+    manifest = StructType.fromJson(
+        json.loads(t._read_manifest_obj(t._version())["schema"])
+    )
+
+    sc = spark.sparkContext
+    group = f"merge-table-read-{id(t)}"
+    sc.setJobGroup(group, "ParquetMergeTable.read")
+    try:
+        df = t.read()
+        schema = df.schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert schema == _as_nullable(manifest)
+    assert sorted((r["id"], r["name"]) for r in df.collect()) == [(1, "a"), (2, None)]

@@ -1032,13 +1032,15 @@ def test_drift_monitor_streaming_wiring(spark, tmp_path):
 
 def test_gold_incremental_crash_recovery(spark, landing, tmp_path, monkeypatch):
     """VERDICT r4 item 6: kill the incremental gold stream MID-FOLD —
-    after the summary/partner/eligibility/claim-status states have
-    merged the batch but before quality/kpis/detail and before the
-    epoch commit — then restart from the same checkpoint. The per-state
-    epoch guards must skip the four already-folded merges on replay
-    and apply the missing three, leaving every one of the 11 marts
-    bit-equal to an uninterrupted run on the same input (and the
-    summary mart exactly equal to the batch recompute)."""
+    the quality merge raises while the other state commits of the same
+    micro-batch run beside it (they finish before the error surfaces),
+    so every state but quality has merged the batch and the checkpoint
+    has not committed the epoch — then restart from the same
+    checkpoint. The per-state epoch guards must skip the already-folded
+    states on replay and apply the missing quality fold, leaving every
+    one of the 11 marts bit-equal to an uninterrupted run on the same
+    input (and the summary mart exactly equal to the batch
+    recompute)."""
     import ai_fabric_etl_spark.streaming.gold_stream as gs
     from ai_fabric_etl_spark.pipeline.gold import transaction_summary
     from ai_fabric_etl_spark.streaming.gold_stream import (
@@ -1134,6 +1136,146 @@ def test_gold_incremental_crash_recovery(spark, landing, tmp_path, monkeypatch):
     ]
     exp = transaction_summary(silver).select(*shared)
     assert rowset(got_df.select(*shared)) == rowset(exp)
+
+
+def _incremental_mart_rows(spark, state):
+    """Every incrementally maintained mart under ``state``, collected."""
+    import ai_fabric_etl_spark.streaming.gold_stream as gs
+
+    out = {
+        sub: getattr(gs, f"read_incremental_{sub}")(spark, f"{state}/{sub}").collect()
+        for sub in ("summary", "partner", "eligibility", "claim_status", "quality", "kpis")
+    }
+    for name in gs._detail_marts():
+        out[name] = gs.read_incremental_detail(spark, f"{state}/detail", name).collect()
+    return out
+
+
+def _state_tables(state):
+    """Root of every ParquetMergeTable under ``state``."""
+    return sorted(root for root, _, files in os.walk(state) if "_LATEST" in files)
+
+
+def _land_drop(landing, drop, n_files=3):
+    for name, content in generate_corpus(n_files=n_files, seed=60 + drop):
+        (landing / f"d{drop}_{name}").write_text(content)
+
+
+def _drain(spark, landing, state, ckpt):
+    from ai_fabric_etl_spark.streaming.gold_stream import start_gold_incremental
+
+    stream = parse_to_silver(stream_bronze(spark, str(landing)), now=NOW)
+    q = start_gold_incremental(stream, str(state), ckpt)
+    q.awaitTermination(180)
+    if q.exception() is not None:
+        raise q.exception()
+
+
+def test_gold_incremental_failed_fold_releases_cached_frames(spark, tmp_path, monkeypatch):
+    """A micro-batch whose fold raises still unpersists the batch and its
+    parsed payload: the persistent-RDD count is what it was before."""
+    import ai_fabric_etl_spark.streaming.gold_stream as gs
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("injected merge failure")
+
+    monkeypatch.setattr(gs, "merge_quality_batch", broken)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _land_drop(landing, 0)
+    jsc = spark.sparkContext._jsc.sc()
+    cached_before = jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception, match="injected merge failure"):
+        _drain(spark, landing, tmp_path / "state", str(tmp_path / "ckpt"))
+    assert jsc.getPersistentRDDs().size() == cached_before
+
+
+def test_gold_incremental_concurrent_fold_failure_contract(spark, tmp_path, monkeypatch):
+    """One merge raises for epoch 1 while the others commit beside it:
+    the stream surfaces the error, every other state table has folded
+    epoch 1, and a restart from the checkpoint leaves the marts equal
+    to a clean run over the same drops."""
+    import ai_fabric_etl_spark.streaming.gold_stream as gs
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    state_a, ckpt_a = tmp_path / "state_a", str(tmp_path / "ckpt_a")
+    orig_summary = gs.merge_summary_batch
+
+    def flaky_summary(spark, batch, path, epoch_id=None, app_id=None, **kw):
+        if epoch_id == 1:
+            raise RuntimeError("injected summary failure")
+        return orig_summary(spark, batch, path, epoch_id, app_id, **kw)
+
+    monkeypatch.setattr(gs, "merge_summary_batch", flaky_summary)
+    _land_drop(landing, 0)
+    _drain(spark, landing, state_a, ckpt_a)
+    _land_drop(landing, 1)
+    with pytest.raises(Exception, match="injected summary failure"):
+        _drain(spark, landing, state_a, ckpt_a)
+
+    tables = _state_tables(state_a)
+    assert len(tables) == 11
+    for root in tables:
+        want = 0 if root == str(state_a / "summary") else 1
+        assert ParquetMergeTable(spark, root).last_epoch(ckpt_a) == want, root
+
+    monkeypatch.setattr(gs, "merge_summary_batch", orig_summary)
+    _drain(spark, landing, state_a, ckpt_a)
+    assert all(
+        ParquetMergeTable(spark, root).last_epoch(ckpt_a) == 1 for root in tables
+    )
+
+    # clean run: the same two drops, in the same two epochs
+    clean_landing = tmp_path / "clean_landing"
+    clean_landing.mkdir()
+    state_b, ckpt_b = tmp_path / "state_b", str(tmp_path / "ckpt_b")
+    for drop in (0, 1):
+        _land_drop(clean_landing, drop)
+        _drain(spark, clean_landing, state_b, ckpt_b)
+
+    def rowset(rows):
+        return sorted(tuple(str(v) for v in r) for r in rows)
+
+    got, want = _incremental_mart_rows(spark, state_a), _incremental_mart_rows(spark, state_b)
+    assert got.keys() == want.keys()
+    for name in want:
+        assert rowset(got[name]) == rowset(want[name]), name
+
+
+def test_gold_incremental_state_stays_bounded(spark, tmp_path):
+    """Four drops leave at most two versions in every state table, and
+    the marts still equal one clean drain of the same files."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    state, ckpt = tmp_path / "state", str(tmp_path / "ckpt")
+    for drop in range(4):
+        _land_drop(landing, drop)
+        _drain(spark, landing, state, ckpt)
+
+    tables = _state_tables(state)
+    assert len(tables) == 11
+    for root in tables:
+        t = ParquetMergeTable(spark, root)
+        assert t.last_epoch(ckpt) == 3, root
+        assert len(t.versions()) <= 2, (root, t.versions())
+
+    clean = tmp_path / "clean"
+    _drain(spark, landing, clean, str(tmp_path / "ckpt_clean"))
+
+    def split(row):
+        # doubles (averages, charge sums) re-associate across partials
+        exact = tuple(str(v) for v in row if not isinstance(v, float))
+        return exact, [v for v in row if isinstance(v, float)]
+
+    got, want = _incremental_mart_rows(spark, state), _incremental_mart_rows(spark, clean)
+    assert got.keys() == want.keys()
+    for name in want:
+        g = sorted(map(split, got[name]), key=lambda p: p[0])
+        w = sorted(map(split, want[name]), key=lambda p: p[0])
+        assert [e for e, _ in g] == [e for e, _ in w], name
+        for (_, gf), (_, wf) in zip(g, w):
+            assert gf == pytest.approx(wf, rel=1e-9), name
 
 
 def test_stream_interval_join_left_outer_matches_batch(spark, tmp_path):
