@@ -39,12 +39,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twin for each queries() entry.
 
-    The seven entries absent here are genuinely hash-defined,
-    model-fitted, or sequential ops (xxhash-keyed LSH / SimHash
-    variants, k-means-codebook PQ, the greedy packer, fake-decode
-    plumbing) — each has a companion ★ entry that value-verifies its
-    invariant (planted-duplicate recall, recall floors, packing
-    feasibility, real-codec round trips), so every operator family is
+    The one entry absent here is ``pack_greedy_firstfit``: strict
+    first-fit packing is sequential per stratum, so its bin ids have
+    no SQL twin. Its companion ★ entry ``pack_firstfit_invariants``
+    value-verifies the packing invariants (every document in exactly
+    one bin, no bin over budget), so every catalog entry is
     driver-gated. The X12 parse itself is fully value-oracled
     (spec-derived expected silver) through BOTH access paths
     (mapInPandas pipeline and the x12 data source).

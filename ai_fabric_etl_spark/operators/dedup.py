@@ -443,8 +443,8 @@ _SIG_BUCKETS = 64
 
 # _components_star resolves edge lists at or under this cap with a
 # driver union-find (identical min-id labels, one-slice result) and
-# takes the distributed star rounds above it — the same decision-sized
-# localization contract as streaming/admission_common.MAX_LOCAL_EDGES.
+# takes the distributed star rounds above it (decision-sized
+# localization: the cap bounds what the driver holds).
 _LOCAL_COMPONENT_EDGE_CAP = 1_000_000
 _MINHASH_META = "_minhash_index_meta.json"
 
@@ -847,9 +847,7 @@ def _components_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     # downstream action then broadcasts a tiny local relation instead
     # of replaying the certificate + star-round machinery, and the
     # round loop's 4+ checkpointed shuffle jobs never get scheduled.
-    # Anything above the cap takes the distributed star rounds — the
-    # same bounded-localization contract (and failure honesty) as
-    # streaming/admission_common's MAX_LOCAL_EDGES.
+    # Anything above the cap takes the distributed star rounds.
     if base.count() <= _LOCAL_COMPONENT_EDGE_CAP:
         rows = base.collect()
         parent: dict = {}

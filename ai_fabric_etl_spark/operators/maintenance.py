@@ -1,13 +1,12 @@
 """Small-file compaction for the streaming-appended index layouts
 (VERDICT r11 item 2).
 
-Every admission micro-batch appends one parquet file per touched
+Every streaming micro-batch append writes one parquet file per touched
 partition into the persisted indexes — the image/audio phash index
 and the video frame-hash index (``ci=<i>/cb=<b>/`` dirs,
 operators/multimodal.py), the MinHash text index (``sigs/sb=<b>/``
 — flat on pre-r13 indexes — + ``bands/band=<b>/`` dirs,
-operators/dedup.py / streaming/text_admission.py), and the embedding
-LSH index
+operators/dedup.py), and the embedding LSH index
 (``keys/table=<t>/`` + ``vecs/``, operators/similarity.py). The
 probes stay partition-PRUNED regardless, but after 10^4–10^5 batches
 per-partition file listings and parquet footer reads dominate the
@@ -274,8 +273,8 @@ def maintenance_tick(
     state_dir: str | None = None,
     min_files: int = 2,
 ) -> dict | None:
-    """The gates' SCHEDULED maintenance hook (VERDICT r12 item 2):
-    called by every admission gate's foreachBatch fold AFTER the
+    """The SCHEDULED maintenance hook (VERDICT r12 item 2) for a
+    foreachBatch fold that appends to these indexes: called AFTER the
     epoch's decision commit — the documented quiet point (the fold is
     serial, so no writer is concurrent) — and a no-op except on every
     ``every_n_epochs``-th epoch. On a firing epoch it compacts each

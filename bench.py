@@ -52,74 +52,35 @@ HEADLINE = [
     "tpch_q15_top_supplier",       # reused view + MAX scalar
     "tpch_q16_supplier_part_counts",  # NOT IN anti join + count-distinct
     "tpch_q20_part_promotion_suppliers",  # nested-IN semi chain
-    "text_profile",                # text analysis suite
     "asof_click_before_purchase",  # as-of join (union + window)
     "range_recent_activity",       # bucketed range join
     "sample_hash_split",           # deterministic hash split
-    "dedup_exact",                 # hash dedup
-    "curate_corpus_pipeline",      # quality gate -> dedup -> split -> pack
-    "dedup_ngram_jaccard",         # inverted-index near-dup
-    "dedup_span_coverage",         # substring-span dup coverage (Lee et al.)
-    "dedup_minhash_lsh",           # MinHash LSH
-    "emb_knn_bruteforce",          # similarity search
-    "emb_neardup",                 # embedding near-dup (bucketed LSH path)
-    "search_bm25_topk",            # BM25 relevance top-k
-    "search_hybrid_rrf",           # BM25 + cosine reciprocal-rank fusion
-    "emb_semdedup_planted",        # SemDeDup cell-scoped semantic dedup
     "sample_priority_bottomk",     # mergeable bottom-k per-group sample
     "topk_docs_per_source",        # grouped top-k (prereduced window)
     "quantile_sketch_prices",      # mergeable quantile summaries
     "funnel_view_click_purchase",  # sequential funnel (chained aggs)
-    "text_chunk_windows",          # token-window chunking (codegen)
-    "emb_quantize_int8",           # int8 embedding quantization
     "sample_temperature_mixture",  # source-flattened mixture quotas
-    "text_tfidf_topk",             # per-doc keyword vectors
-    "text_bpe_roundtrip",          # BPE train + encode + decode round trip
-    "text_bigram_lm_nll",          # corpus bigram-LM quality scoring
-    "text_unigram_roundtrip",      # unigram-LM tokenizer train+encode+decode
     "attribution_linear_touch",    # range join + credit split
     "profile_histogram_equidepth", # quantile histogram (rank semantics)
-    "er_resolve_entities",         # block->match->cluster->survivor
     "rfm_customer_segments",       # distributed ntile scoring
     "graph_triangle_counts",       # degree-oriented wedge closure
-    "text_pmi_collocations",       # exact-integer PMI collocations
     "lakehouse_incremental_join_view",  # feed-driven join-view fold
     "skew_hotkey_salted_agg",      # zipfian hot key via salted two-phase agg
     "source_sqlite_roundtrip",     # real-DB write+partitioned read+pushdown
     "source_avro_roundtrip",       # stdlib Avro container write+read
     "export_wds_roundtrip",        # WebDataset tar-shard export+import
     "sketch_cms_events",           # count-min sketch build + point queries
-    "text_nb_classifier",          # NB quality classifier train + score
     "sample_dsir_topk",            # DSIR hashed-bigram importance selection
-    "emb_random_projection",       # JL sign projection (pure codegen)
     "sample_token_budget",         # per-domain token-budget prefix cut (r8)
-    "dedup_soft_weights",          # inverse-cluster-size soft dedup (r8)
-    "emb_neardup_incremental",     # O(batch) near-dup vs persisted index (r8)
-    "text_trigram_backoff_nll",    # stupid-backoff trigram LM (r9)
-    "dedup_span_removal",          # cross-doc span deletion (r9)
-    "text_wordpiece_roundtrip",    # WordPiece train+encode+decode (r9)
-    "search_mmr_rerank",           # MMR diversity re-ranking (r9)
-    "multimodal_phash_neardup",    # image dHash near-dup, real codecs (r9)
-    "multimodal_audiofp_neardup",  # audio energy-hash near-dup (r9)
-    "multimodal_video_neardup",    # video frame-hash near-dup (r9)
-    "multimodal_phash_incremental",  # O(batch) image admission vs index (r9)
     "privacy_dp_counts",           # epsilon-DP Laplace count release (r10)
-    "dedup_keep_best",             # quality-argmax cluster canonical (r10)
     "privacy_dp_sum",              # clipped-contribution DP sum (r10)
-    "search_retrieval_metrics",    # recall@k / MRR / nDCG eval (r10)
-    "text_langid",                 # char-n-gram NB language ID (r11)
-    "audio_admission_gate",        # continuous audio admission (r11)
-    "video_admission_gate",        # continuous video admission (r11)
-    "paired_admission_gate",       # cross-modal pair admission (r11)
-    "embedding_admission_gate",    # continuous embedding admission (r11)
     "x12_silver_transactions",     # distributed X12 parse
 ]
 
 # the linear-scaling evidence subset (tools/gen_scale.py corpora):
 # sf-table-bound queries whose work is linear in the multiplier by
-# construction — replica-local joins, fixed dims, and (for the
-# dedup/ANN/text family) replica-distinct content so pair outputs
-# grow linearly, not quadratically, with the multiplier
+# construction — replica-local joins, fixed dims, replica-distinct
+# content
 SCALE_HEADLINE = [
     "tpch_q1_pricing_summary",
     "tpch_q3_shipping_priority",
@@ -137,61 +98,14 @@ SCALE_HEADLINE = [
     "asof_click_before_purchase",
     "range_recent_activity",
     "sample_hash_split",
-    "dedup_exact",
-    "text_profile",
-    "emb_quantize_int8",
     "topk_docs_per_source",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_span_coverage",
-    "emb_knn_bruteforce",
-    "emb_neardup",
-    "text_tfidf_topk",
-    "curate_corpus_pipeline",
     "sample_temperature_mixture",
-    "search_bm25_topk",
-    # r6 additions, linear by construction: tokenizers cap their
-    # driver word dicts (max_words), LM/line-dedup shuffle volumes
-    # are linear in tokens/lines
-    "text_bpe_roundtrip",
-    "text_unigram_roundtrip",
-    "text_bigram_lm_nll",
-    "text_line_dedup",
-    # r7: fusion of two linear top-k reductions (bm25 + knn) — linear
-    # by construction; semdedup stays out (its within-cell pair work
-    # is quadratic at FIXED k; the operator's scale contract is grow-k)
-    "search_hybrid_rrf",
-    # r7 second pass, linear by construction: CMS is one bounded
-    # aggregation; NB/DSIR scoring joins carry one row per (doc,
-    # token/bucket) hit; JL projection is per-row codegen
+    # CMS is one bounded aggregation; DSIR scoring joins carry one row
+    # per (doc, bucket) hit; the DP release is one grouped count +
+    # per-group codegen noise
     "sketch_cms_events",
-    "text_nb_classifier",
     "sample_dsir_topk",
-    "emb_random_projection",
-    # r9: trigram LM — three count aggs + per-token-hit joins, linear
-    # in tokens like the bigram entry; span removal rides the span-
-    # coverage machinery (one gram shuffle + bounded position fanout);
-    # wordpiece caps its driver word dict like BPE; phash is one
-    # linear decode pass + bounded-bucket chunk joins (distinct noise
-    # images -> distinct hashes, so candidate pairs stay planted-only)
-    "text_trigram_backoff_nll",
-    "dedup_span_removal",
-    "text_wordpiece_roundtrip",
-    "multimodal_phash_neardup",
-    # r10: keep-best rides the same pairs->components machinery as
-    # soft_weights (O(log n) star rounds); the DP release is one
-    # grouped count + per-group codegen noise
-    "dedup_keep_best",
     "privacy_dp_counts",
-    # r13 (VERDICT r12 item 5): the persisted-index probe paths get
-    # doubling curves too. dedup_incremental_planted's measured work
-    # is index build (linear: sign+write the corpus) + O(batch)
-    # probe; multimodal_phash_incremental's fixture index persists
-    # under .bench_cache across the best-of-2, so its min IS the
-    # pruned probe — expected near-FLAT with corpus growth (only
-    # touched-bucket occupancy grows), which is the claim under test
-    "dedup_incremental_planted",
-    "multimodal_phash_incremental",
 ]
 
 
@@ -268,14 +182,6 @@ def compact_line(out: dict, budget: int = LINE_BUDGET) -> str:
         "x12_parse_tx_per_sec": out.get("x12_parse_tx_per_sec"),
         "full": "BENCH_FULL.json",
     }
-    if out.get("gate_trend"):
-        # 2dp lists keep the printed line lean; 3dp detail in FULL
-        slim["gate_trend"] = {
-            k: ([round(x, 2) for x in v] if isinstance(v, list) else v)
-            for k, v in out["gate_trend"].items()
-        }
-    if out.get("compaction_probe"):
-        slim["compaction_probe"] = out["compaction_probe"]
     regs = out.get("regressions", [])
     if regs:
         slim["regressions"] = [[r["query"], r["ratio"]] for r in regs[:6]]
@@ -326,8 +232,6 @@ def main() -> None:
     headline, skip_x12 = HEADLINE, False
     if subset == "scale":
         headline, skip_x12 = SCALE_HEADLINE, True
-    elif subset == "gate_trend":
-        headline, skip_x12 = [], True  # trend block only (below)
     elif subset:
         headline = [q for q in subset.split(",") if q]
         skip_x12 = "x12_silver_transactions" not in headline
@@ -405,29 +309,6 @@ def main() -> None:
     except Exception as ex:  # noqa: BLE001 - keep the suite alive
         errors["x12_parse_throughput"] = f"{type(ex).__name__}: {ex}"[:300]
 
-    # gate-family throughput trend (VERDICT r11 item 5): 5-batch
-    # admission sequence per modality against the warm fixture
-    # indexes; per-batch latency must stay flat — the observable form
-    # of the O(batch) ledger/index commit plan that single-batch rows
-    # cannot see. Runs on the full headline pass or on demand
-    # (SPARK_GRAFT_BENCH_QUERIES=gate_trend).
-    gate_trend: dict = {}
-    compaction_probe: dict = {}
-    if headline is HEADLINE or subset == "gate_trend":
-        try:
-            from ai_fabric_etl_spark.queries.gate_trend import (
-                run_compaction_probe,
-                run_gate_trends,
-            )
-
-            gate_trend = run_gate_trends(spark, SF_DIR)
-            # index small-file maintenance (VERDICT r11 item 2): probe
-            # vs a 100-append fragmented index, then vs its compacted
-            # copy — identical decisions, bounded file counts
-            compaction_probe = run_compaction_probe(spark, SF_DIR)
-        except Exception as ex:  # noqa: BLE001 - keep the suite alive
-            errors["gate_trend"] = f"{type(ex).__name__}: {ex}"[:300]
-
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     out = {
         "metric": "headline_suite_seconds",
@@ -440,10 +321,6 @@ def main() -> None:
         "x12_parse_seconds": round(parse_s, 3) if parse_s == parse_s else None,
         "x12_parse_tx_per_sec": round(n_tx / parse_s, 1) if parse_s == parse_s and parse_s > 0 else None,
     }
-    if gate_trend:
-        out["gate_trend"] = gate_trend
-    if compaction_probe:
-        out["compaction_probe"] = compaction_probe
     prev_file, prev = _previous_round_timings()
     regressions = [
         {

@@ -41,6 +41,24 @@ def test_composites_registered_and_prioritized():
         assert group in o, f"{group} must carry a DuckDB oracle"
 
 
+def test_priority_groups_and_meta_name_registered_entries():
+    # _ordered() skips a _PRIORITY name that is not registered, and a
+    # stale FP_META key is never read: both would hide a deleted entry
+    import ai_fabric_etl_spark.queries  # noqa: F401  (registers entries)
+    from ai_fabric_etl_spark.queries import catalog, composites
+    from ai_fabric_etl_spark.queries.fingerprint_meta import FP_META
+
+    registered = set(catalog._QUERIES)
+    stale = {
+        "_PRIORITY": sorted(set(catalog._PRIORITY) - registered),
+        "FP_GROUPS": sorted(
+            {n for g in composites.FP_GROUPS.values() for n in g} - registered
+        ),
+        "FP_META": sorted(set(FP_META) - registered),
+    }
+    assert not any(stale.values()), f"unregistered names: {stale}"
+
+
 def test_fingerprint_detects_value_change(spark):
     # the summary must actually be sensitive: perturbing one numeric
     # value in one row flips num_sum

@@ -5,13 +5,12 @@ BYTE-IDENTICAL probe decisions, with `_meta` pins preserved."""
 
 import glob
 import os
-import shutil
 
 import numpy as np
 
 from pyspark.sql import functions as F
 
-from ai_fabric_etl_spark.operators import codecs, dedup, multimodal, similarity
+from ai_fabric_etl_spark.operators import codecs, multimodal, similarity
 from ai_fabric_etl_spark.operators.maintenance import (
     compact_index,
     compact_parquet_dir,
@@ -142,56 +141,6 @@ def test_video_index_compaction_identical_probe(spark, tmp_path):
     assert before == after and len(before) >= 2
 
 
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_text_index_compaction_identical_gate_decisions(spark, tmp_path):
-    """The MinHash text index keeps identical ADMISSION decisions
-    after compaction: the same probe batch against the fragmented
-    index and its compacted copy routes identically."""
-    from ai_fabric_etl_spark.streaming.text_admission import (
-        admit_text_batch,
-        read_decisions,
-    )
-
-    idx = str(tmp_path / "idx")
-    corpus = _docs(spark, [
-        (1, "the quick brown fox jumps over the lazy dog again and again"),
-        (2, "completely different text about spark query planning at scale"),
-    ])
-    dedup.minhash_index_write(corpus, idx)
-    for b in range(5):  # fragment: 5 admission appends
-        batch = _docs(spark, [
-            (100 + b, f"novel document number {b} with words all of its own "
-                      f"variant {b} body text padding tokens {b}"),
-        ])
-        admit_text_batch(spark, batch, idx, str(tmp_path / f"s{b}"),
-                         epoch_id=0, app_id=f"s{b}")
-    frag = str(tmp_path / "frag")
-    shutil.copytree(idx, frag)
-    stats = compact_index(spark, idx)
-    assert stats["leaves_compacted"] > 0
-
-    probe = _docs(spark, [
-        (900, "the quick brown fox jumps over the lazy dog again and again"),
-        (901, f"novel document number 3 with words all of its own "
-              f"variant 3 body text padding tokens 3"),
-        (902, "entirely fresh content that matches nothing in the corpus"),
-    ])
-    admit_text_batch(spark, probe, frag, str(tmp_path / "st_frag"),
-                     epoch_id=0, app_id="p")
-    admit_text_batch(spark, probe, idx, str(tmp_path / "st_comp"),
-                     epoch_id=0, app_id="p")
-    d_frag = sorted(map(tuple, read_decisions(
-        spark, str(tmp_path / "st_frag")).collect()))
-    d_comp = sorted(map(tuple, read_decisions(
-        spark, str(tmp_path / "st_comp")).collect()))
-    assert d_frag == d_comp
-    routed = {r[0]: r[1] for r in d_comp}
-    assert routed[900] is False and routed[901] is False and routed[902]
-
-
 def test_emb_lsh_index_compaction_identical(spark, tmp_path):
     idx = str(tmp_path / "idx")
     rng = np.random.RandomState(7)
@@ -258,29 +207,3 @@ def test_compact_reaps_orphan_tmp_dirs(spark, tmp_path):
     compact_parquet_dir(spark, p)
     assert not os.path.exists(orphan)
     assert sorted(map(tuple, spark.read.parquet(p).collect())) == before
-
-
-def test_bench_fixture_lock_released_on_build_failure(tmp_path, monkeypatch):
-    """ADVICE r12: a raise inside the fixture build must release the
-    flock (and not pin the key) so a retry REBUILDS instead of
-    deadlocking on the leaked fd."""
-    import pytest
-
-    from ai_fabric_etl_spark.queries.text_queries import _bench_fixture
-
-    # point the repo-local .bench_cache at a temp dir via cwd-relative
-    # name isolation: use a unique fixture name instead
-    name = f"locktest_{os.getpid()}"
-    key = {"v": 1}
-    with pytest.raises(RuntimeError, match="boom"):
-        with _bench_fixture(str(tmp_path / "sf"), name, key) as (root, fresh):
-            assert not fresh
-            raise RuntimeError("boom")
-    # retry: must acquire the lock immediately (no deadlock) and see
-    # the fixture still stale (key was never pinned)
-    with _bench_fixture(str(tmp_path / "sf"), name, key) as (root, fresh):
-        assert not fresh
-    # clean exit pinned it
-    with _bench_fixture(str(tmp_path / "sf"), name, key) as (root, fresh):
-        assert fresh
-    shutil.rmtree(root, ignore_errors=True)

@@ -1,8 +1,7 @@
-"""O(batch) append commits on ParquetMergeTable and the admission
-gates' decision ledgers (VERDICT r11 weak #1: the gates previously
-rewrote the FULL decision history every micro-batch; VERDICT r12
-item 1: the interim hardlink layout degraded to O(table) copies on
-filesystems without hardlinks).
+"""O(batch) append commits on ParquetMergeTable (VERDICT r11 weak #1:
+ledgers previously rewrote the FULL history every micro-batch;
+VERDICT r12 item 1: the interim hardlink layout degraded to O(table)
+copies on filesystems without hardlinks).
 
 Under the r13 MANIFEST layout each version dir holds only its batch's
 file(s), so per-commit growth is directly observable: O(1) directory
@@ -16,15 +15,9 @@ pre-manifest tables.
 import glob
 import os
 
-import numpy as np
 import pytest
 
-from ai_fabric_etl_spark.operators import codecs, multimodal
 from ai_fabric_etl_spark.operators.merge import ParquetMergeTable
-from ai_fabric_etl_spark.streaming.media_admission import (
-    admit_media_batch,
-    read_decisions,
-)
 
 
 def _version_inode_bytes(path: str, v: int) -> dict[int, int]:
@@ -119,56 +112,6 @@ def test_append_then_maintenance_still_work(spark, tmp_path):
     t.compact(target_files=1)
     assert sorted(r.id for r in t.read().collect()) == [0, 1, 2, 3]
     assert t.last_epoch("a") == 3  # guard survives maintenance
-
-
-def _img(seed: int) -> bytearray:
-    rng = np.random.RandomState(seed)
-    return bytearray(
-        codecs.encode_bmp(rng.randint(0, 256, (16, 18, 3)).astype(np.uint8))
-    )
-
-
-def test_media_gate_ledger_commit_o_batch(spark, tmp_path):
-    """End-to-end through the image admission gate: 6 micro-batches,
-    per-batch ledger commit bytes flat, decisions complete, replay
-    still skips (the exactly-once guard rides the same append)."""
-    idx = str(tmp_path / "idx")
-    state = str(tmp_path / "state")
-    multimodal.phash_index_write(
-        spark.createDataFrame([], "media_id long, dhash long"), idx,
-        n_buckets=16,
-    )
-    seen: set[int] = set()
-    per_batch_new: list[int] = []
-    for e in range(6):
-        batch = spark.createDataFrame(
-            [(e * 10 + i, _img(e * 10 + i)) for i in range(3)],
-            "media_id long, payload binary",
-        )
-        admit_media_batch(spark, batch, idx, state, epoch_id=e, app_id="t")
-        # inodes the commit introduced vs everything seen before it
-        # (hardlinked carry-overs share inodes — zero new bytes)
-        t = ParquetMergeTable(spark, state)
-        sizes = _version_inode_bytes(state, t.versions()[-1])
-        per_batch_new.append(
-            sum(sz for ino, sz in sizes.items() if ino not in seen)
-        )
-        seen.update(sizes)
-    dec = read_decisions(spark, state)
-    assert dec.count() == 18
-    assert dec.filter("admitted").count() == 18  # all novel
-    # flat per-batch commit I/O: every batch writes one decision file,
-    # never the accumulated ledger
-    assert max(per_batch_new) <= 3 * min(per_batch_new)
-    # replay of the last epoch is a no-op (guard rides the append)
-    admit_media_batch(
-        spark,
-        spark.createDataFrame(
-            [(50, _img(50))], "media_id long, payload binary"
-        ),
-        idx, state, epoch_id=5, app_id="t",
-    )
-    assert read_decisions(spark, state).count() == 18
 
 
 def test_append_o1_directory_entries_per_commit(spark, tmp_path):

@@ -193,37 +193,6 @@ def test_equidepth_histogram_ignores_null_values_both_paths(spark):
         assert max(ns) - min(ns) <= 1
 
 
-def test_editdistance_ids_survive_large_keys(spark):
-    """The ER/editdistance variant-id offsets derive from max(key)+1,
-    so synthetic ids can never collide with base ids even when keys
-    exceed any fixed literal."""
-    from ai_fabric_etl_spark.queries.text_queries import (
-        q_er_resolve_entities,
-    )
-    import tempfile
-
-    names = [
-        "crimson anchor plate",
-        "turquoise widget drum",
-        "olive sprocket vane",
-        "magenta flywheel rod",
-        "cobalt gasket frame",
-        "amber piston shell",
-    ]
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            [(10_000_000 + i, n) for i, n in enumerate(names)],
-            ["p_partkey", "p_name"],
-        ).write.parquet(f"{d}/part.parquet")
-        out = q_er_resolve_entities(spark, d).collect()
-        # every base name resolves to its own entity (names mutually
-        # far apart); planted typos attach to their original, which
-        # only holds if variant ids never collide with base ids
-        assert len(out) == 6
-        assert {r.canonical_text for r in out} == set(names)
-        assert sum(r.n_records for r in out) > 6  # typos joined in
-
-
 def test_triangle_counts_known_graph(spark):
     """K4 plus a pendant vertex: K4 has 4 triangles, each K4 vertex
     sits in 3 of them, the pendant in none."""

@@ -34,12 +34,8 @@ TABLES = [
 
 # Oracles that emit DECIMAL output columns ON PURPOSE, with the Spark
 # side emitting the same decimal type (so both fetch paths agree).
-# emb_random_projection: JL projection coordinates are fixed-order
-# DECIMAL(18,6) sums on BOTH sides precisely so the replay is
-# bit-exact — the decimal is the mechanism, not an accident.
-DELIBERATE_DECIMAL = {
-    "emb_random_projection": {f"p{i}" for i in range(16)},
-}
+# None remain: each entry maps oracle name -> its DECIMAL columns.
+DELIBERATE_DECIMAL: dict[str, set[str]] = {}
 
 
 @pytest.fixture(scope="module")

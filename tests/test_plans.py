@@ -79,18 +79,6 @@ def test_bucketized_join_is_shuffle_free(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
-def test_emb_neardup_lsh_has_no_nested_loop(spark, sf_dir):
-    """VERDICT r1 item 4 regression gate: the embedding near-dup
-    contract path must plan as a bucketed hash join, never the O(n^2)
-    BroadcastNestedLoop the brute-force theta join produces."""
-    from ai_fabric_etl_spark.plans.inspect import plan_string
-    from ai_fabric_etl_spark.queries.text_queries import q_emb_neardup
-
-    plan = plan_string(q_emb_neardup(spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_x12_claim_mart_prunes_nested_schema(spark, tmp_path):
     """On a parquet-backed silver table, the 837 claim mart's SCAN must
     read only the parsed sub-fields it uses (nested schema pruning) —
@@ -121,15 +109,6 @@ def test_q17_decorrelated_no_cartesian(spark, sf_dir):
     plan = plan_string(tpch_q17_small_quantity_revenue(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_text_clean_redact_is_shuffle_free(spark, sf_dir):
-    """The hygiene pass is a pure projection: scan -> project, zero
-    exchanges (it composes with any downstream op without a shuffle)."""
-    from ai_fabric_etl_spark.plans.inspect import exchange_count
-    from ai_fabric_etl_spark.queries.text_queries import q_text_clean_redact
-
-    assert exchange_count(q_text_clean_redact(spark, sf_dir)) == 0
 
 
 def test_q4_semi_join_and_q22_anti_join(spark, sf_dir):
@@ -274,19 +253,17 @@ def test_ivf_index_scan_is_dynamically_pruned(spark, sf_dir, tmp_path):
 
 
 def test_new_analytics_plans_broadcast_small_sides(spark, sf_dir):
-    """Round-4 operators: the small side (corpus stats, quantile
-    bounds, part dim, cohort sizes) must broadcast — never shuffle the
-    fact side for a dimension-sized frame."""
+    """Round-4 operators: the small side (quantile bounds, part dim,
+    cohort sizes) must broadcast, and every join is a hash join —
+    never shuffle the fact side for a dimension-sized frame."""
     from ai_fabric_etl_spark.plans.inspect import plan_string
     from ai_fabric_etl_spark.queries.behavior_queries import (
         affinity_brand_pairs,
         cohort_retention_weekly,
         winsorize_prices,
     )
-    from ai_fabric_etl_spark.queries.text_queries import q_search_bm25_topk
 
     for fn, label in [
-        (q_search_bm25_topk, "bm25"),
         (winsorize_prices, "winsorize"),
         (affinity_brand_pairs, "affinity"),
         (cohort_retention_weekly, "cohort"),
@@ -294,10 +271,7 @@ def test_new_analytics_plans_broadcast_small_sides(spark, sf_dir):
         plan = plan_string(fn(spark, sf_dir))
         assert "BroadcastHashJoin" in plan, label
         assert "CartesianProduct" not in plan, label
-        assert "BroadcastNestedLoopJoin" not in plan or label == "bm25", label
-        # bm25's scalar corpus-stats join is a 1-row broadcast nested
-        # loop by construction (no join key) — acceptable; everything
-        # else must be hash joins only
+        assert "BroadcastNestedLoopJoin" not in plan, label
 
 
 def test_histogram_and_chunker_stay_codegen(spark, sf_dir):
@@ -364,10 +338,9 @@ def test_runtime_bloom_filter_prunes_probe_side(spark, sf_dir):
 def test_session_entries_have_no_cartesian_blowups(spark, sf_dir):
     """Eighth-pass entries: no CartesianProduct anywhere; nested-loop
     joins only where they are 1-row scalar broadcasts by construction
-    (PMI/zipf/mixture totals, attribution's credit divisor carrier).
-    The pair-producing entries (overlap, triangles, ER) must pair
-    through hash joins on their blocking keys, never the cross
-    space."""
+    (mixture totals, attribution's credit divisor carrier). The
+    pair-producing entry (triangles) must pair through hash joins on
+    its blocking keys, never the cross space."""
     from ai_fabric_etl_spark.plans.inspect import plan_string
     from ai_fabric_etl_spark.queries import catalog
 
@@ -375,19 +348,11 @@ def test_session_entries_have_no_cartesian_blowups(spark, sf_dir):
     scalar_bnl_ok = {
         # these cross-join a single aggregate row (broadcast) into the
         # projection — BroadcastNestedLoopJoin over 1 row is the plan
-        "text_pmi_collocations",
-        "text_zipf_slope",
         "sample_temperature_mixture",
-        "er_resolve_entities",
         "lakehouse_incremental_join_view",
-        "text_tfidf_topk",  # 1-row n_docs corpus-stat join
     }
     for name in [
         "sample_temperature_mixture",
-        "text_tfidf_topk",
-        "text_pmi_collocations",
-        "text_zipf_slope",
-        "corpus_overlap_matrix",
         "attribution_linear_touch",
         "profile_histogram_equidepth",
         "graph_triangle_counts",

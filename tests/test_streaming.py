@@ -17,18 +17,17 @@ from pyspark.sql import functions as F
 from ai_fabric_etl_spark.operators.merge import ParquetMergeTable
 from ai_fabric_etl_spark.pipeline.silver import parse_to_silver
 from ai_fabric_etl_spark.queries.catalog import load_events
-from ai_fabric_etl_spark.streaming import (
+from ai_fabric_etl_spark.streaming.ingest import start_silver_ingest, stream_bronze
+from ai_fabric_etl_spark.streaming.ops_metrics import (
     failure_alerts,
     hourly_rollup,
     session_rollup,
     sliding_rollup,
-    start_running_totals,
-    start_silver_ingest,
-    stream_bronze,
 )
 from ai_fabric_etl_spark.streaming.running_aggs import (
     merge_running_totals,
     read_running_totals,
+    start_running_totals,
 )
 from ai_fabric_etl_spark.streaming.stateful import sessionize_with_state
 from ai_fabric_etl_spark.x12.testgen import generate_corpus
@@ -1342,36 +1341,3 @@ def test_stream_interval_join_left_outer_matches_batch(spark, tmp_path):
     assert got == exp and got
     # the outer side genuinely fires: some errors have no nearby click
     assert any(a is None for _, _, a in got)
-
-
-def test_moments_state_pca_matches_batch_fit(spark, sf_dir, tmp_path):
-    """Micro-batch-folded moment state must refit the SAME PCA model
-    as the one-shot batch fit on the union of all batches (moments are
-    exactly additive; eigensolve shares the batch code path), and a
-    replayed epoch must be skipped."""
-    import numpy as np
-
-    from ai_fabric_etl_spark.operators.similarity import pca_fit
-    from ai_fabric_etl_spark.streaming.sketch_state import (
-        merge_moments_state,
-        read_pca_from_moments,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
-    state = str(tmp_path / "moments")
-    b1 = emb.filter(F.col("vec_id") % 3 == 0)
-    b2 = emb.filter(F.col("vec_id") % 3 == 1)
-    b3 = emb.filter(F.col("vec_id") % 3 == 2)
-    for epoch, b in enumerate((b1, b2, b3)):
-        merge_moments_state(spark, b, state, epoch, app_id="mom1")
-    # replay epoch 1 with junk: must be ignored
-    merge_moments_state(
-        spark, emb.limit(50), state, 1, app_id="mom1"
-    )
-    got = read_pca_from_moments(spark, state, k=5)
-    want = pca_fit(emb, "embedding", k=5)
-    assert abs(got["total_var"] - want["total_var"]) < 1e-8
-    assert np.allclose(got["explained_var"], want["explained_var"],
-                       rtol=1e-8)
-    assert np.allclose(got["components"], want["components"], atol=1e-7)
-    assert np.allclose(got["mean"], want["mean"], atol=1e-12)

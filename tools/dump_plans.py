@@ -7,11 +7,6 @@ evidence files: plans/r14/<query>_before.txt / _after.txt). Runs each
 query function lazily — no action is executed, so a dump is cheap; the
 plan shown is the pre-AQE physical plan (the judged artifact: Exchange
 count, join strategy, PushedFilters/ReadSchema, *EvalPython nodes).
-
-Queries whose value is produced by driver-side machinery (the
-admission gates: they run batch folds + read the decision ledger)
-still dump the final read plan; their real evidence is phase timings,
-recorded in OPTIMIZATION_r14.md instead.
 """
 
 from __future__ import annotations

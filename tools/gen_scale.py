@@ -132,7 +132,8 @@ def generate(src: str, dest: str, m: int = 10) -> None:
     # coordinate offset is NOT enough: against a 64-dim vector it
     # leaves replicas at cosine ~0.99, manufacturing cross-replica
     # near-dup cliques that turn pair operators quadratic in the
-    # multiplier (measured: emb_neardup x28 at m=10 before this fix).
+    # multiplier (measured: an embedding near-dup join x28 at m=10
+    # before this fix).
     dim = con.sql(
         f"SELECT MAX(len(embedding)) FROM '{p['embeddings']}'"
     ).fetchone()[0]

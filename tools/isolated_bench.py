@@ -14,7 +14,7 @@ isolated numbers are comparable ONLY to other isolated runs under
 this same protocol.
 
 Usage: python tools/isolated_bench.py OUT.json [query ...]
-(defaults to the r12 isolated set). Run with the machine otherwise
+(defaults to the r12 isolated set's surviving entries). Run with the machine otherwise
 idle.
 """
 
@@ -26,24 +26,10 @@ import subprocess
 import sys
 
 DEFAULT_QUERIES = [
-    "audio_admission_gate",
-    "video_admission_gate",
-    "embedding_admission_gate",
-    "paired_admission_gate",
-    "multimodal_phash_incremental",
-    "er_resolve_entities",
     "graph_triangle_counts",
-    "dedup_keep_best",
-    "dedup_soft_weights",
     "tpch_q18_large_volume_customer",
-    "emb_knn_bruteforce",
-    "dedup_minhash_lsh",
-    "text_langid",
     "w4_session_windows",
     "tpch_q1_pricing_summary",
-    "multimodal_video_neardup",
-    "dedup_ngram_jaccard",
-    "multimodal_audiofp_neardup",
 ]
 
 PROTOCOL = (
