@@ -22,22 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_SIZE_SUFFIX = {"b": 1, "k": 1024, "m": 1024**2, "g": 1024**3}
-
-
 def _broadcast_threshold_bytes(spark) -> int:
     """The session's autoBroadcastJoinThreshold in bytes (-1 when
-    auto-broadcast is disabled); accepts the bare-int and k/m/g forms
-    the conf admits."""
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ).strip().lower()
-    try:
-        if raw and raw[-1] in _SIZE_SUFFIX:
-            return int(float(raw[:-1]) * _SIZE_SUFFIX[raw[-1]])
-        return int(raw)
-    except ValueError:
-        return 10 * 1024**2
+    auto-broadcast is disabled), parsed by Spark's own SQLConf, so every
+    byte-string form the conf admits gives the bytes the planner uses."""
+    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
 
 
 def pagerank(

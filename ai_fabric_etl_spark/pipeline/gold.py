@@ -15,8 +15,9 @@ codegen end to end.
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
+from typing import Any, NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 P = "parsed"
@@ -28,42 +29,260 @@ P = "parsed"
 _TXN_KEYS = ("file_name", "functional_group_number",
              "transaction_set_control_number")
 
+_TX_TYPES = ("837", "835", "834", "270", "271", "276", "277", "278", "279")
 
-def _base(silver: DataFrame, start_date=None, end_date=None) -> DataFrame:
-    """Lookback window + validity filter (gold_x12_analytics.py:72-74).
-    Both predicates prune: processing_date is a partition column."""
-    df = silver
-    if start_date is not None:
-        df = df.filter(F.col("processing_date") >= F.lit(start_date))
-    if end_date is not None:
-        df = df.filter(F.col("processing_date") <= F.lit(end_date))
-    return df.filter(F.col("is_valid"))
+# lgConfigK=12 → 4 KiB sketch / key, ~1.6% standard error; raise to 14
+# at very high per-key cardinality (16 KiB, ~0.8%).
+_HLL_LG_K = 12
 
 
-def transaction_summary(silver: DataFrame, **w) -> DataFrame:
+def _base(silver: DataFrame) -> DataFrame:
+    """Validity filter (gold_x12_analytics.py:72-74)."""
+    return silver.filter(F.col("is_valid"))
+
+
+# ---------------------------------------------------------------------------
+# aggregate marts: one definition, a batch form and a stream form
+# ---------------------------------------------------------------------------
+
+
+class Term(NamedTuple):
+    """One output column of an aggregate mart. ``expr`` is the input
+    Column (derived: a function of a name → Column lookup over the keys
+    and the earlier terms); ``state`` names the column a distinct term
+    keeps in the stream.
+
+    ``kind`` fixes the batch form (``batch_column``) and the stream form
+    (``state_columns`` partial + merge, ``state_read``). count, sum, min
+    and max are the same aggregate in both; the stream merges them by
+    sum, sum, min and max. The deliberate differences:
+    - avg: F.avg in batch; decimal score_sum plus the non-null score_cnt
+      in the stream (F.avg skips NULLs, so the read divides by score_cnt);
+    - distinct: exact countDistinct in batch; in the stream an HLL sketch,
+      or an exact set for transaction_type, whose domain is _TX_TYPES;
+    - stamp (created_at): the batch write's wall-clock time; a stream
+      view has no write to stamp, and a read-time stamp would make two
+      reads of one state differ;
+    - state: kept by the stream only, so state tables keep their schema.
+    - derived: computed from the other columns after the aggregate."""
+
+    name: str
+    kind: str
+    expr: Any = None
+    state: str | None = None
+
+
+class Mart(NamedTuple):
+    """``groupBy(keys).agg(terms)`` over the rows ``where`` admits (None:
+    all). Built by a function, since Columns need an active session."""
+
+    keys: tuple[str, ...]
+    where: Column | None
+    terms: tuple[Term, ...]
+
+
+def batch_column(t: Term, lookup) -> Column | None:
+    """The batch aggregate of ``t``, or None for a stream-only term."""
+    if t.kind == "count":
+        return F.count(F.lit(1))
+    if t.kind in ("sum", "min", "max"):
+        return getattr(F, t.kind)(t.expr)
+    if t.kind == "avg":
+        return F.avg(t.expr)
+    if t.kind == "distinct":
+        return F.countDistinct(t.expr)
+    if t.kind == "derived":
+        return t.expr(lookup)
+    if t.kind == "stamp":
+        return F.current_timestamp()
+    return None
+
+
+def state_columns(t: Term) -> list[tuple[str, Column, Column]]:
+    """(state column, per-batch partial, merge of partials) for ``t``."""
+    n = t.name
+    if t.kind in ("count", "state"):
+        return [(n, F.count(F.lit(1)), F.sum(n))]
+    if t.kind in ("sum", "min", "max"):
+        agg = getattr(F, t.kind)
+        return [(n, agg(t.expr), agg(n))]
+    if t.kind == "avg":
+        return [
+            ("score_sum", F.sum(t.expr.cast("decimal(18,4)")), F.sum("score_sum")),
+            ("score_cnt", F.count(t.expr), F.sum("score_cnt")),
+        ]
+    if t.kind == "distinct" and t.state == "type_set":
+        return [(t.state, F.collect_set(t.expr),
+                 F.array_distinct(F.flatten(F.collect_list(t.state))))]
+    if t.kind == "distinct":
+        return [(t.state, F.hll_sketch_agg(t.expr, F.lit(_HLL_LG_K)),
+                 F.hll_union_agg(t.state))]
+    return []
+
+
+def state_read(t: Term, lookup) -> Column | None:
+    """The mart column ``t`` reads back from its state, or None."""
+    if t.kind == "avg":
+        return F.col("score_sum").cast("double") / F.col("score_cnt")
+    if t.kind == "distinct" and t.state == "type_set":
+        return F.size(t.state).cast("bigint")
+    if t.kind == "distinct":
+        return F.hll_sketch_estimate(t.state)
+    if t.kind == "derived":
+        return t.expr(lookup)
+    if t.kind in ("stamp", "state"):
+        return None
+    return F.col(t.name)
+
+
+def select_terms(terms, form) -> list[Column]:
+    """Each term's ``form`` column, aliased; a derived term looks up
+    the earlier terms' columns of the same form, or a key."""
+    cols: dict[str, Column] = {}
+    for t in terms:
+        c = form(t, lambda n: cols.get(n, F.col(n)))
+        if c is not None:
+            cols[t.name] = c
+    return [c.alias(n) for n, c in cols.items()]
+
+
+def aggregate(silver: DataFrame, mart: Mart) -> DataFrame:
+    """The batch form: one groupBy over the rows the mart admits."""
+    rows = silver if mart.where is None else silver.filter(mart.where)
+    return rows.groupBy(*mart.keys).agg(*select_terms(mart.terms, batch_column))
+
+
+def _count_if(cond: Column) -> Column:
+    return F.when(cond, 1).otherwise(0)
+
+
+def summary_mart() -> Mart:
     """gold_transaction_summary (gold_x12_analytics.py:443-461)."""
-    return (
-        _base(silver, **w)
-        .groupBy("processing_date", "transaction_type", "sender_id", "receiver_id")
-        .agg(
-            F.count(F.lit(1)).alias("transaction_count"),
-            F.avg("quality_score").alias("average_quality_score"),
-            F.min("processing_timestamp").alias("first_processed"),
-            F.max("processing_timestamp").alias("last_processed"),
-            F.countDistinct("interchange_control_number").alias("unique_interchanges"),
-            F.countDistinct("file_name").alias("unique_files"),
-        )
-        .withColumn("created_at", F.current_timestamp())
+    ts = F.col("processing_timestamp")
+    return Mart(
+        ("processing_date", "transaction_type", "sender_id", "receiver_id"),
+        F.col("is_valid"),
+        (
+            Term("transaction_count", "count"),
+            Term("average_quality_score", "avg", F.col("quality_score")),
+            Term("first_processed", "min", ts),
+            Term("last_processed", "max", ts),
+            Term("unique_interchanges", "distinct", F.col("interchange_control_number"),
+                 "interchange_sketch"),
+            Term("unique_files", "distinct", F.col("file_name"), "file_sketch"),
+            Term("created_at", "stamp"),
+        ),
     )
 
 
-def claim_analytics(silver: DataFrame, **w) -> DataFrame:
+def partner_mart() -> Mart:
+    """gold_trading_partner_analytics (gold_x12_analytics.py:600-628):
+    9 per-type conditional counts per partner pair."""
+    ts = F.col("processing_timestamp")
+    return Mart(
+        ("processing_date", "sender_id", "receiver_id"),
+        F.col("is_valid"),
+        (
+            Term("total_transactions", "count"),
+            Term("unique_transaction_types", "distinct", F.col("transaction_type"), "type_set"),
+            Term("average_quality_score", "avg", F.col("quality_score")),
+            *[
+                Term(f"count_{t}", "sum", _count_if(F.col("transaction_type") == t))
+                for t in _TX_TYPES
+            ],
+            Term("unique_interchanges", "distinct", F.col("interchange_control_number"),
+                 "interchange_sketch"),
+            Term("first_transaction", "min", ts),
+            Term("last_transaction", "max", ts),
+            Term("trading_partner_id", "derived",
+                 lambda c: F.concat(c("sender_id"), F.lit("-"), c("receiver_id"))),
+        ),
+    )
+
+
+def eligibility_mart() -> Mart:
+    """Eligibility mart (270/271) — promised by README.md:256 but never
+    built in the reference (U4 registered, never applied). Wired here."""
+    tt = F.col("transaction_type")
+    return Mart(
+        ("processing_date", "sender_id", "receiver_id"),
+        F.col("is_valid") & tt.isin("270", "271"),
+        (
+            Term("inquiries", "sum", _count_if(tt == "270")),
+            Term("responses", "sum", _count_if(tt == "271")),
+            Term("total_inquiry_items", "sum",
+                 F.coalesce(F.col(f"{P}.inquiry_count"), F.lit(0))),
+            Term("total_benefits", "sum", F.coalesce(F.col(f"{P}.benefit_count"), F.lit(0))),
+            Term("active_coverage_count", "sum",
+                 _count_if(F.coalesce(F.col(f"{P}.active_coverage"), F.lit(False)))),
+            Term("average_quality_score", "avg", F.col("quality_score")),
+            Term("n_rows", "state"),
+        ),
+    )
+
+
+def quality_mart() -> Mart:
+    """gold_data_quality_metrics (gold_x12_analytics.py:737-761):
+    note — no is_valid filter; quality reporting covers invalid rows."""
+    qs = F.col("quality_score")
+
+    def pct(band: str):
+        return lambda c: c(band) * 100.0 / c("transaction_count")
+
+    return Mart(
+        ("processing_date", "transaction_type"),
+        None,
+        (
+            Term("transaction_count", "count"),
+            Term("average_quality_score", "avg", qs),
+            Term("min_quality_score", "min", qs),
+            Term("max_quality_score", "max", qs),
+            Term("high_quality_count", "sum", _count_if(qs >= 90)),
+            Term("medium_quality_count", "sum", _count_if((qs >= 70) & (qs < 90))),
+            Term("low_quality_count", "sum", _count_if(qs < 70)),
+            Term("high_quality_percentage", "derived", pct("high_quality_count")),
+            Term("medium_quality_percentage", "derived", pct("medium_quality_count")),
+            Term("low_quality_percentage", "derived", pct("low_quality_count")),
+            Term("unique_files", "distinct", F.col("file_name"), "file_sketch"),
+            Term("unique_senders", "distinct", F.col("sender_id"), "sender_sketch"),
+            Term("unique_receivers", "distinct", F.col("receiver_id"), "receiver_sketch"),
+        ),
+    )
+
+
+def kpi_mart() -> Mart:
+    """gold_business_kpis (gold_x12_analytics.py:773-796) with the
+    :778 bug fixed: countDistinct over the concat *expression*. A global
+    aggregate: no keys."""
+    combo = F.concat(F.col("sender_id"), F.lit("-"), F.col("receiver_id"))
+    return Mart(
+        (),
+        F.col("is_valid"),
+        (
+            Term("total_transactions", "count"),
+            Term("unique_files", "distinct", F.col("file_name"), "file_sketch"),
+            Term("unique_transaction_types", "distinct", F.col("transaction_type"), "type_set"),
+            Term("unique_senders", "distinct", F.col("sender_id"), "sender_sketch"),
+            Term("unique_receivers", "distinct", F.col("receiver_id"), "receiver_sketch"),
+            Term("unique_trading_partnerships", "distinct", combo, "combo_sketch"),
+            Term("average_quality_score", "avg", F.col("quality_score")),
+            Term("last_processed", "max", F.col("processing_timestamp")),
+        ),
+    )
+
+
+def transaction_summary(silver: DataFrame) -> DataFrame:
+    """gold_transaction_summary (gold_x12_analytics.py:443-461)."""
+    return aggregate(silver, summary_mart())
+
+
+def claim_analytics(silver: DataFrame) -> DataFrame:
     """gold_healthcare_claim_analytics (gold_x12_analytics.py:477-502).
 
     calculated_total comes from exploding service lines — the
     distributed replacement for U1's Python loop.
     """
-    base = _base(silver, **w).filter(F.col("transaction_type") == "837")
+    base = _base(silver).filter(F.col("transaction_type") == "837")
     # per-transaction line rollup via explode (claims -> service_lines).
     # Transaction identity includes functional_group_number: ST02
     # control numbers are unique only within a GS group, so keying on
@@ -105,9 +324,9 @@ def claim_analytics(silver: DataFrame, **w) -> DataFrame:
     )
 
 
-def payment_analytics(silver: DataFrame, **w) -> DataFrame:
+def payment_analytics(silver: DataFrame) -> DataFrame:
     """gold_healthcare_payment_analytics (gold_x12_analytics.py:518-545)."""
-    base = _base(silver, **w).filter(F.col("transaction_type") == "835")
+    base = _base(silver).filter(F.col("transaction_type") == "835")
     df = base.select(
         "processing_date",
         *_TXN_KEYS,
@@ -135,9 +354,9 @@ def payment_analytics(silver: DataFrame, **w) -> DataFrame:
     )
 
 
-def enrollment_analytics(silver: DataFrame, **w) -> DataFrame:
+def enrollment_analytics(silver: DataFrame) -> DataFrame:
     """gold_healthcare_enrollment_analytics (gold_x12_analytics.py:561-588)."""
-    base = _base(silver, **w).filter(F.col("transaction_type") == "834")
+    base = _base(silver).filter(F.col("transaction_type") == "834")
     cov = (
         base.select(
             *_TXN_KEYS,
@@ -181,52 +400,17 @@ def enrollment_analytics(silver: DataFrame, **w) -> DataFrame:
     )
 
 
-def trading_partner_analytics(silver: DataFrame, **w) -> DataFrame:
-    """gold_trading_partner_analytics (gold_x12_analytics.py:600-628):
-    9 per-type conditional counts per partner pair."""
-    base = _base(silver, **w)
-    type_counts = [
-        F.sum(F.when(F.col("transaction_type") == t, 1).otherwise(0)).alias(f"count_{t}")
-        for t in ("837", "835", "834", "270", "271", "276", "277", "278", "279")
-    ]
-    return (
-        base.groupBy("processing_date", "sender_id", "receiver_id")
-        .agg(
-            F.count(F.lit(1)).alias("total_transactions"),
-            F.countDistinct("transaction_type").alias("unique_transaction_types"),
-            F.avg("quality_score").alias("average_quality_score"),
-            *type_counts,
-            F.countDistinct("interchange_control_number").alias("unique_interchanges"),
-            F.min("processing_timestamp").alias("first_transaction"),
-            F.max("processing_timestamp").alias("last_transaction"),
-        )
-        .withColumn(
-            "trading_partner_id",
-            F.concat(F.col("sender_id"), F.lit("-"), F.col("receiver_id")),
-        )
-    )
+def trading_partner_analytics(silver: DataFrame) -> DataFrame:
+    """gold_trading_partner_analytics (gold_x12_analytics.py:600-628)."""
+    return aggregate(silver, partner_mart())
 
 
-def eligibility_analytics(silver: DataFrame, **w) -> DataFrame:
-    """Eligibility mart (270/271) — promised by README.md:256 but never
-    built in the reference (U4 registered, never applied). Wired here."""
-    base = _base(silver, **w).filter(F.col("transaction_type").isin("270", "271"))
-    return (
-        base.groupBy("processing_date", "sender_id", "receiver_id")
-        .agg(
-            F.sum(F.when(F.col("transaction_type") == "270", 1).otherwise(0)).alias("inquiries"),
-            F.sum(F.when(F.col("transaction_type") == "271", 1).otherwise(0)).alias("responses"),
-            F.sum(F.coalesce(F.col(f"{P}.inquiry_count"), F.lit(0))).alias("total_inquiry_items"),
-            F.sum(F.coalesce(F.col(f"{P}.benefit_count"), F.lit(0))).alias("total_benefits"),
-            F.sum(
-                F.when(F.coalesce(F.col(f"{P}.active_coverage"), F.lit(False)), 1).otherwise(0)
-            ).alias("active_coverage_count"),
-            F.avg("quality_score").alias("average_quality_score"),
-        )
-    )
+def eligibility_analytics(silver: DataFrame) -> DataFrame:
+    """Eligibility mart (270/271), README.md:256."""
+    return aggregate(silver, eligibility_mart())
 
 
-def claim_status_analytics(silver: DataFrame, **w) -> DataFrame:
+def claim_status_analytics(silver: DataFrame) -> DataFrame:
     """Claim-status mart (276/277) — promised by README.md:257, never
     built in the reference (U5 registered, never applied). Wired here.
 
@@ -238,7 +422,7 @@ def claim_status_analytics(silver: DataFrame, **w) -> DataFrame:
     counted 276s per exploded row and responses per line, mixing
     grains in one ratio."""
     keys = ["processing_date", "sender_id", "receiver_id"]
-    base = _base(silver, **w).filter(F.col("transaction_type").isin("276", "277"))
+    base = _base(silver).filter(F.col("transaction_type").isin("276", "277"))
     tx = base.groupBy(*keys).agg(
         F.sum(F.when(F.col("transaction_type") == "276", 1).otherwise(0)).alias(
             "status_requests"
@@ -265,9 +449,9 @@ def claim_status_analytics(silver: DataFrame, **w) -> DataFrame:
     )
 
 
-def preauth_request_analytics(silver: DataFrame, **w) -> DataFrame:
+def preauth_request_analytics(silver: DataFrame) -> DataFrame:
     """gold_healthcare_preauth_request_analytics (gold_x12_analytics.py:644-671)."""
-    base = _base(silver, **w).filter(F.col("transaction_type") == "278")
+    base = _base(silver).filter(F.col("transaction_type") == "278")
     return base.select(
         "processing_date",
         *_TXN_KEYS,
@@ -279,10 +463,10 @@ def preauth_request_analytics(silver: DataFrame, **w) -> DataFrame:
     )
 
 
-def preauth_response_analytics(silver: DataFrame, **w) -> DataFrame:
+def preauth_response_analytics(silver: DataFrame) -> DataFrame:
     """gold_healthcare_preauth_response_analytics
     (gold_x12_analytics.py:689-723): A1-A4/A6,CT,DJ/PA,PN buckets."""
-    base = _base(silver, **w).filter(F.col("transaction_type") == "279")
+    base = _base(silver).filter(F.col("transaction_type") == "279")
     df = base.select(
         "processing_date",
         *_TXN_KEYS,
@@ -308,50 +492,14 @@ def preauth_response_analytics(silver: DataFrame, **w) -> DataFrame:
     )
 
 
-def data_quality_metrics(silver: DataFrame, **w) -> DataFrame:
-    """gold_data_quality_metrics (gold_x12_analytics.py:737-761):
-    note — no is_valid filter; quality reporting covers invalid rows."""
-    df = silver
-    if w.get("start_date") is not None:
-        df = df.filter(F.col("processing_date") >= F.lit(w["start_date"]))
-    if w.get("end_date") is not None:
-        df = df.filter(F.col("processing_date") <= F.lit(w["end_date"]))
-    high = F.sum(F.when(F.col("quality_score") >= 90, 1).otherwise(0))
-    med = F.sum(F.when((F.col("quality_score") >= 70) & (F.col("quality_score") < 90), 1).otherwise(0))
-    low = F.sum(F.when(F.col("quality_score") < 70, 1).otherwise(0))
-    cnt = F.count(F.lit(1))
-    return df.groupBy("processing_date", "transaction_type").agg(
-        cnt.alias("transaction_count"),
-        F.avg("quality_score").alias("average_quality_score"),
-        F.min("quality_score").alias("min_quality_score"),
-        F.max("quality_score").alias("max_quality_score"),
-        high.alias("high_quality_count"),
-        med.alias("medium_quality_count"),
-        low.alias("low_quality_count"),
-        (high * 100.0 / cnt).alias("high_quality_percentage"),
-        (med * 100.0 / cnt).alias("medium_quality_percentage"),
-        (low * 100.0 / cnt).alias("low_quality_percentage"),
-        F.countDistinct("file_name").alias("unique_files"),
-        F.countDistinct("sender_id").alias("unique_senders"),
-        F.countDistinct("receiver_id").alias("unique_receivers"),
-    )
+def data_quality_metrics(silver: DataFrame) -> DataFrame:
+    """gold_data_quality_metrics (gold_x12_analytics.py:737-761)."""
+    return aggregate(silver, quality_mart())
 
 
-def business_kpis(silver: DataFrame, **w) -> DataFrame:
-    """gold_business_kpis (gold_x12_analytics.py:773-796) with the
-    :778 bug fixed: countDistinct over the concat *expression*."""
-    base = _base(silver, **w)
-    combo = F.concat(F.col("sender_id"), F.lit("-"), F.col("receiver_id"))
-    return base.agg(
-        F.count(F.lit(1)).alias("total_transactions"),
-        F.countDistinct("file_name").alias("unique_files"),
-        F.countDistinct("transaction_type").alias("unique_transaction_types"),
-        F.countDistinct("sender_id").alias("unique_senders"),
-        F.countDistinct("receiver_id").alias("unique_receivers"),
-        F.countDistinct(combo).alias("unique_trading_partnerships"),
-        F.avg("quality_score").alias("average_quality_score"),
-        F.max("processing_timestamp").alias("last_processed"),
-    )
+def business_kpis(silver: DataFrame) -> DataFrame:
+    """gold_business_kpis (gold_x12_analytics.py:773-796)."""
+    return aggregate(silver, kpi_mart())
 
 
 ALL_MARTS = {
@@ -369,7 +517,7 @@ ALL_MARTS = {
 }
 
 
-def build_all_marts(silver_with_parsed_df: DataFrame, **w) -> dict[str, DataFrame]:
+def build_all_marts(silver_with_parsed_df: DataFrame) -> dict[str, DataFrame]:
     """Build every mart's plan over one silver frame.
 
     The reference re-reads silver 9+ times (eleven .count() actions,
@@ -377,7 +525,7 @@ def build_all_marts(silver_with_parsed_df: DataFrame, **w) -> dict[str, DataFram
     frame before writing the marts so they share one scan, and
     unpersist it after ``write_marts`` returns (``run._cmd_run``
     persists the parsed silver once for silver, gold and acks)."""
-    return {name: fn(silver_with_parsed_df, **w) for name, fn in ALL_MARTS.items()}
+    return {name: fn(silver_with_parsed_df) for name, fn in ALL_MARTS.items()}
 
 
 def _write_mart(df: DataFrame, path: str) -> None:
@@ -391,9 +539,7 @@ def write_marts(marts: dict[str, DataFrame], out_dir: str) -> None:
     """S7: partitioned-overwrite mart sinks
     (gold_x12_analytics.py:458-461 et al. — mode("overwrite") +
     partitionBy("processing_date")). Marts without a processing_date
-    column (global KPIs) are written unpartitioned. At scale, set
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` so a lookback
-    recompute replaces only the touched date partitions.
+    column (global KPIs) are written unpartitioned.
 
     The marts are independent, so every write is submitted at once on
     one thread per mart and Spark schedules their jobs side by side.

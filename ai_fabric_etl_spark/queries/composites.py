@@ -157,11 +157,6 @@ FP_GROUPS: dict[str, list[str]] = {
         "sample_dsir_topk",
         # r8: per-domain token-budget selection (distributed prefix sum)
         "sample_token_budget",
-        # r8 rotation: r6/r7 flagships rotate out of the 50-slot
-        # window (green in CORRECTNESS_r06/r07); oracles stay fully
-        # driver-visible here
-        "sample_dsir_topk",
-        "sample_token_budget",
         "source_sqlite_roundtrip",
         "pack_token_bins",
         # r11 rotation: displaced veterans (three direct greens each)

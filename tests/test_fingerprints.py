@@ -57,6 +57,13 @@ def test_priority_groups_and_meta_name_registered_entries():
         "FP_META": sorted(set(FP_META) - registered),
     }
     assert not any(stale.values()), f"unregistered names: {stale}"
+    # a repeated member runs its sub-query twice and emits its row twice
+    repeated = {
+        g: sorted({n for n in names if names.count(n) > 1})
+        for g, names in composites.FP_GROUPS.items()
+        if len(set(names)) != len(names)
+    }
+    assert not repeated, f"repeated FP_GROUPS members: {repeated}"
 
 
 def test_fingerprint_detects_value_change(spark):

@@ -470,6 +470,24 @@ def test_pagerank_sink_collects_mass(spark):
     assert r[5] == round(teleport + 0.85 * 4 * teleport, 6)
 
 
+def test_broadcast_threshold_reads_every_spark_byte_form(spark):
+    from ai_fabric_etl_spark.operators.graph import _broadcast_threshold_bytes
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    forms = {
+        "10mb": 10 * 1024**2, "512kb": 512 * 1024, "1gb": 1024**3,
+        "10m": 10 * 1024**2, "64k": 64 * 1024, "2048": 2048,
+        "100b": 100, "-1": -1,
+    }
+    try:
+        for form, want in forms.items():
+            spark.conf.set(key, form)
+            assert _broadcast_threshold_bytes(spark) == want, form
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_resolve_roots_depth_and_doubling(spark):
     from ai_fabric_etl_spark.operators.graph import resolve_roots
 

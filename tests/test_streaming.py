@@ -203,42 +203,6 @@ def test_approx_distinct_error_bound(spark, sf_dir):
     assert rows and all(r.approx_within_bound for r in rows)
 
 
-def test_gold_lookback_refresh_stream(spark, landing, tmp_path):
-    """Streaming gold compat mode: marts on disk match a batch build
-    over the same silver rows."""
-    from ai_fabric_etl_spark.pipeline.gold import build_all_marts
-    from ai_fabric_etl_spark.pipeline.silver import silver_with_parsed
-    from ai_fabric_etl_spark.streaming.gold_stream import start_gold_lookback_refresh
-
-    silver_dir = str(tmp_path / "silver")
-    gold_dir = str(tmp_path / "gold")
-    ckpt = str(tmp_path / "ckpt")
-    cached_before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    stream = parse_to_silver(stream_bronze(spark, landing), now=NOW)
-    q = start_gold_lookback_refresh(stream, silver_dir, gold_dir, ckpt)
-    q.awaitTermination(180)
-    # each refresh releases the silver scan it cached for its marts
-    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == cached_before
-
-    # restore the silver schema's STRING transaction_type — partition
-    # type inference reads the all-numeric values back as int, and the
-    # expected side must not inherit that drift (r4 self-review: the
-    # old test compared drifted-to-drifted and couldn't see the bug)
-    batch_silver = silver_with_parsed(
-        spark.read.parquet(silver_dir)
-        .drop("epoch")
-        .withColumn("transaction_type", F.col("transaction_type").cast("string"))
-    )
-    expected = build_all_marts(batch_silver)
-    got = spark.read.parquet(f"{gold_dir}/gold_transaction_summary")
-    assert dict(got.dtypes)["transaction_type"] == "string"
-    exp = expected["gold_transaction_summary"]
-    key_cols = ["processing_date", "transaction_type", "sender_id", "receiver_id"]
-    assert sorted(map(tuple, got.select(*key_cols, "transaction_count").collect())) == sorted(
-        map(tuple, exp.select(*key_cols, "transaction_count").collect())
-    )
-
-
 def test_gold_incremental_summary_matches_batch(spark, landing, tmp_path):
     """Incremental partial-merge summary == full recompute."""
     from ai_fabric_etl_spark.streaming.gold_stream import (
@@ -648,25 +612,6 @@ def test_gold_incremental_epoch_replay_is_exactly_once(spark, tmp_path):
         F.sum("transaction_count")
     ).collect()[0][0]
     assert total == silver.filter(F.col("is_valid")).count()
-
-
-def test_lookback_silver_epoch_overwrite_is_idempotent(spark, tmp_path):
-    """ADVICE r1 (medium): the lookback mode's silver append is keyed
-    by epoch subdirectory with overwrite semantics, so rewriting the
-    same epoch replaces rather than duplicates."""
-    silver_dir = str(tmp_path / "silver_epochs")
-    files = spark.createDataFrame(
-        generate_corpus(n_files=4, seed=51), "file_name string, content string"
-    )
-    batch = parse_to_silver(files, now=NOW).cache()
-    for _ in range(2):  # same epoch written twice = replay
-        (
-            batch.write.mode("overwrite")
-            .partitionBy("processing_date", "transaction_type")
-            .parquet(f"{silver_dir}/epoch=0")
-        )
-    accumulated = spark.read.parquet(silver_dir).drop("epoch")
-    assert accumulated.count() == batch.count()
 
 
 def test_stream_interval_join_matches_batch_range_join(spark, tmp_path):
@@ -1275,6 +1220,103 @@ def test_gold_incremental_state_stays_bounded(spark, tmp_path):
         assert [e for e, _ in g] == [e for e, _ in w], name
         for (_, gf), (_, wf) in zip(g, w):
             assert gf == pytest.approx(wf, rel=1e-9), name
+
+
+# HLL-estimated columns of the incremental marts; every other column
+# of the stream must equal the batch CLI's exactly (doubles to 1e-9)
+_SKETCHED = {
+    "gold_transaction_summary": {"unique_interchanges", "unique_files"},
+    "gold_trading_partner_analytics": {"unique_interchanges"},
+    "gold_data_quality_metrics": {"unique_files", "unique_senders", "unique_receivers"},
+    "gold_business_kpis": {"unique_files", "unique_senders", "unique_receivers",
+                           "unique_trading_partnerships"},
+}
+_STREAM_READS = {
+    "gold_transaction_summary": "summary",
+    "gold_trading_partner_analytics": "partner",
+    "gold_eligibility_analytics": "eligibility",
+    "gold_claim_status_analytics": "claim_status",
+    "gold_data_quality_metrics": "quality",
+    "gold_business_kpis": "kpis",
+}
+
+
+def test_batch_cli_and_incremental_stream_marts_agree(spark, tmp_path, monkeypatch):
+    """One seeded landing directory through the batch CLI and through
+    stream_bronze -> parse_to_silver -> start_gold_incremental in two
+    drops: all 11 marts have the batch mart's columns, in its order
+    (the summary's wall-clock created_at is the batch write's own), and
+    the same values: exact except doubles (re-associated sums, to 1e-9)
+    and HLL distinct estimates (within max(1, 5%))."""
+    from functools import partial
+
+    import ai_fabric_etl_spark.pipeline.silver as silver_mod
+    import ai_fabric_etl_spark.streaming.gold_stream as gs
+    from ai_fabric_etl_spark.pipeline.gold import ALL_MARTS, build_all_marts
+    from ai_fabric_etl_spark.run import main
+
+    corpus = generate_corpus(n_files=18, seed=83)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    state, ckpt = tmp_path / "state", str(tmp_path / "ckpt")
+    for drop in (corpus[:8], corpus[8:]):
+        for name, content in drop:
+            (landing / name).write_text(content)
+        _drain(spark, landing, state, ckpt)
+
+    # the CLI stamps silver with the same processing time as the stream
+    monkeypatch.setattr(silver_mod, "parse_to_silver", partial(parse_to_silver, now=NOW))
+    out = str(tmp_path / "wh")
+    assert main(["run", "--input", str(landing), "--out", out]) == 0
+    batch_cols = {
+        name: df.columns for name, df in build_all_marts(
+            silver_mod.silver_with_parsed(silver_mod.read_silver(spark, f"{out}/silver"))
+        ).items()
+    }
+    assert list(batch_cols) == list(ALL_MARTS)
+
+    for name, cols in batch_cols.items():
+        if name in _STREAM_READS:
+            got = getattr(gs, f"read_incremental_{_STREAM_READS[name]}")(
+                spark, f"{state}/{_STREAM_READS[name]}")
+        else:
+            got = gs.read_incremental_detail(spark, f"{state}/detail", name)
+        assert got.columns == [c for c in cols if c != "created_at"], name
+        disk = spark.read.parquet(f"{out}/gold/{name}")
+        assert sorted(disk.columns) == sorted(cols), name
+
+        doubles = {c for c, t in got.dtypes if t == "double"}
+        sketched = _SKETCHED.get(name, set())
+        exact = [c for c in got.columns if c not in doubles | sketched]
+
+        g_rows, b_rows = (
+            sorted(df.select(*got.columns).collect(),
+                   key=lambda r: tuple(str(r[c]) for c in exact))
+            for df in (got, disk)
+        )
+        assert len(g_rows) == len(b_rows) > 0, name
+        for g, b in zip(g_rows, b_rows):
+            assert [g[c] for c in exact] == [b[c] for c in exact], name
+            for c in doubles:
+                if b[c] is None:
+                    assert g[c] is None, (name, c)
+                else:
+                    assert g[c] == pytest.approx(b[c], rel=1e-9), (name, c)
+            for c in sketched:
+                assert abs(g[c] - b[c]) <= max(1, 0.05 * b[c]), (name, c)
+
+
+def test_gold_stream_imports_without_a_session():
+    """Importing gold_stream builds no Column, so it needs no session."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run(
+        [sys.executable, "-c", "import ai_fabric_etl_spark.streaming.gold_stream"],
+        cwd=repo, capture_output=True, text=True, timeout=300,
+    )
+    assert done.returncode == 0, done.stderr
 
 
 def test_stream_interval_join_left_outer_matches_batch(spark, tmp_path):
